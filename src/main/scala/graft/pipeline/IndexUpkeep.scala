@@ -7,14 +7,16 @@ import org.apache.spark.sql.functions._
   * twin of the per-batch maintenance [[MemFuse.ingest]] performs inline
   * (the reference maintains FTS5/vector stores on every insert no
   * matter which path wrote the row; a streamed chunk must be reachable
-  * through the indexes without a manual rebuild).
+  * through the indexes without a manual rebuild). The keyword index and
+  * the ONE live vector index ([[VectorIndex.open]]: ivfpq, then pq, then
+  * ivf — whichever family the last build left live) absorb the batch.
   *
   * Differences from the facade path, both deliberate:
   *  - ids already present in an index are ANTI-JOINED away first, which
-  *    makes absorption idempotent: a crash-replayed micro-batch, or
-  *    identical content re-sent later (content-addressed chunk_ids
-  *    collide by construction), must not append duplicate postings —
-  *    BM25 df/doclen would double and ANN fusion would see duplicate
+  *    makes absorption idempotent: a crash-replayed micro-batch
+  *    regenerates the same chunk ids (they hash the batch's m0 ids and
+  *    content), and must not append duplicate postings — BM25
+  *    df/doclen would double and ANN fusion would see duplicate
   *    candidates. The facade's batch path reaches the same guarantee
   *    through its `preIndexedIds` mutation protocol.
   *  - quantizer re-fit is NOT triggered here: a micro-batch stays
@@ -30,29 +32,14 @@ object IndexUpkeep {
     * side indexes exist under `$base/index`. No-op when none exist. */
   def absorbBatch(spark: SparkSession, base: String, chunks: DataFrame): Unit = {
     val idxBase = s"$base/index"
-    def has(k: String) = TableOps.currentArtifactDir(spark, idxBase, k).isDefined
-    if (!(has("kw") || has("ivf") || has("pq") || has("ivfpq"))) return
-    if (has("kw")) {
+    if (TableOps.currentArtifactDir(spark, idxBase, "kw").isDefined) {
       val kw = new KeywordIndex(spark, idxBase)
       kw.addDocuments(
         chunks.select(col("chunk_id").as("doc_id"), col("content").as("text"))
           .join(kw.indexedDocIds, Seq("doc_id"), "left_anti"))
     }
     val vecs = chunks.select(col("chunk_id").as("vec_id"), col("embedding"))
-    if (has("ivf")) {
-      val h = IvfIndex.load(spark, idxBase)
-      h.addVectors(vecs.join(h.assigned.select("vec_id"),
-        Seq("vec_id"), "left_anti"), idxBase)
-    }
-    if (has("pq")) {
-      val h = PqIndex.load(spark, idxBase)
-      h.addVectors(vecs.join(h.codesArr.select("vec_id"),
-        Seq("vec_id"), "left_anti"), idxBase)
-    }
-    if (has("ivfpq")) {
-      val h = IvfPq.load(spark, idxBase)
-      h.addVectors(vecs.join(h.codesArr.select("vec_id"),
-        Seq("vec_id"), "left_anti"), idxBase)
-    }
+    VectorIndex.open(spark, idxBase).foreach(h =>
+      h.addVectors(vecs.join(h.ids, Seq("vec_id"), "left_anti"), idxBase))
   }
 }

@@ -24,7 +24,15 @@ class IvfIndex private[pipeline] (
     // the version dir this handle was opened from: incremental adds go
     // HERE, never to a version committed after open (whose centroids
     // this handle does not hold)
-    private val srcDir: Option[String] = None) {
+    private val srcDir: Option[String] = None) extends VectorIndex {
+
+  def kind: String = "ivf"
+  @transient lazy val nVectors: Long = assigned.count()
+  def ids: DataFrame = assigned.select("vec_id")
+  def candidates(q: Array[Float], k: Int, nProbe: Int,
+      embeddings: => DataFrame): DataFrame = query(q, k, nProbe)
+  def refit(vecs: DataFrame): VectorIndex = IvfIndex.build(vecs.sparkSession, vecs, nlist)
+  def withoutDead(liveVecs: DataFrame): VectorIndex = refit(liveVecs)
 
   /** Top-k cosine neighbors of `queryVec`, probing `nProbe` clusters.
     * `excludeId` drops the query's own row BEFORE the limit, so with
@@ -69,7 +77,6 @@ class IvfIndex private[pipeline] (
     * contract). Handles opened before the update are stale — reload
     * after. */
   def addVectors(newVecs: DataFrame, basePath: String): Double = {
-    val spark = newVecs.sparkSession
     // same guard as PqIndex.addVectors: a built-but-never-loaded handle
     // would append into a version dir its own scan never reads
     val vp = srcDir.getOrElse(throw new IllegalStateException(
@@ -86,10 +93,7 @@ class IvfIndex private[pipeline] (
       .select("vec_id", "embedding", "cluster")
       .write.mode(SaveMode.Append).partitionBy("cluster")
       .parquet(s"$vp/ivf_assigned")
-    val nNew = newVecs.count()
-    val total = spark.read.parquet(s"$vp/ivf_assigned").count().toDouble
-    val unfit = if (fitRows >= 0) total - fitRows else nNew.toDouble
-    if (total == 0) 0.0 else math.max(0.0, unfit) / total
+    VectorIndex.drift(newVecs, s"$vp/ivf_assigned", fitRows)
   }
 
   /** Persist the index: assignments partitioned by `cluster` (the probe
@@ -101,7 +105,7 @@ class IvfIndex private[pipeline] (
   def save(basePath: String): Unit = {
     val spark = assigned.sparkSession
     import spark.implicits._
-    val name = TableOps.nextArtifactDir(spark, basePath, "ivf")
+    val name = TableOps.nextArtifactDir(spark, basePath, kind)
     val vp = s"$basePath/$name"
     assigned.write.mode(SaveMode.Overwrite)
       .partitionBy("cluster").parquet(s"$vp/ivf_assigned")
@@ -112,7 +116,7 @@ class IvfIndex private[pipeline] (
       else spark.read.parquet(s"$vp/ivf_assigned").count()
     Seq(n).toDF("n_fit_rows")
       .write.mode(SaveMode.Overwrite).parquet(s"$vp/ivf_meta")
-    TableOps.commitArtifactDir(spark, basePath, "ivf", name)
+    TableOps.commitArtifactDir(spark, basePath, kind, name)
   }
 }
 
@@ -150,17 +154,14 @@ object IvfIndex {
     new IvfIndex(centroids, assigned, fitRows = total)
   }
 
-  /** The committed version dir to read (pre-versioning layouts fall back
-    * to the flat base path). */
-  private[pipeline] def resolvedDir(spark: SparkSession, basePath: String): String =
-    TableOps.currentArtifactDir(spark, basePath, "ivf")
-      .map(v => s"$basePath/$v").getOrElse(basePath)
-
   /** Reopen a saved index — centroids to the driver (tiny), assignments
     * stay a lazy partitioned scan pinned to the version dir committed at
     * open time (a concurrent rebuild never yanks this handle's files). */
-  def load(spark: SparkSession, basePath: String): IvfIndex = {
-    val vp = resolvedDir(spark, basePath)
+  def load(spark: SparkSession, basePath: String): IvfIndex =
+    loadDir(spark, VectorIndex.resolvedDir(spark, basePath, "ivf"))
+
+  /** [[load]] from a resolved version dir. */
+  private[pipeline] def loadDir(spark: SparkSession, vp: String): IvfIndex = {
     val centroids = spark.read.parquet(s"$vp/ivf_centroids")
       .collect()
       .map(r => (r.getAs[Number]("cluster").intValue(),

@@ -233,9 +233,11 @@ object IvfPq {
   /** Reopen a saved index: both codebooks to the driver, codes a lazy
     * cluster-partitioned scan pinned to the version committed at open
     * time (pointer-CAS lifecycle shared with the other indexes). */
-  def load(spark: SparkSession, basePath: String): IvfPqIndex = {
-    val vp = TableOps.currentArtifactDir(spark, basePath, "ivfpq")
-      .map(v => s"$basePath/$v").getOrElse(basePath)
+  def load(spark: SparkSession, basePath: String): IvfPqIndex =
+    loadDir(spark, VectorIndex.resolvedDir(spark, basePath, "ivfpq"))
+
+  /** [[load]] from a resolved version dir. */
+  private[pipeline] def loadDir(spark: SparkSession, vp: String): IvfPqIndex = {
     def cb(sub: String) = spark.read.parquet(s"$vp/$sub").collect()
       .map(r => (r.getAs[Number]("sub").intValue(),
         r.getAs[Number]("code").intValue(),
@@ -261,7 +263,9 @@ class IvfPqIndex private[pipeline] (
     val model: IvfPq.Model,
     val codesArr: DataFrame,
     val fitRows: Long = -1L,
-    private val srcDir: Option[String] = None) {
+    private val srcDir: Option[String] = None) extends VectorIndex {
+
+  def kind: String = "ivfpq"
 
   /** Row-layout view (vec_id, cluster, sub, code) — the query form. */
   def codes: DataFrame = codesArr.select(col("vec_id"), col("cluster"),
@@ -272,23 +276,32 @@ class IvfPqIndex private[pipeline] (
     * convention). */
   @transient lazy val nVectors: Long = codesArr.count()
 
+  def ids: DataFrame = codesArr.select("vec_id")
+  def candidates(q: Array[Float], k: Int, nProbe: Int,
+      embeddings: => DataFrame): DataFrame =
+    query(q, k, nProbe, rescoreFrom = Some(embeddings))
+
+  def refit(vecs: DataFrame): VectorIndex =
+    IvfPq.build(vecs, nlist = model.nlist, m = model.m, ksub = model.ksub, dim = model.dim)
+
+  def withoutDead(liveVecs: DataFrame): VectorIndex =
+    VectorIndex.liveCodeRebuild(this, codesArr, liveVecs,
+      IvfPq.encodeArrays(_, model),
+      (codes, fit) => new IvfPqIndex(model, codes, fitRows = fit))
+
   /** Encode NEW vectors with the EXISTING quantizers (coarse cell +
     * residual codes) and append into the cluster partitions — the
     * incremental-add contract shared with IvfIndex/PqIndex. Returns
     * the drift ratio (fraction the quantizers were never fit on); the
     * caller schedules a re-train past a threshold. */
   def addVectors(newVecs: DataFrame, basePath: String): Double = {
-    val spark = newVecs.sparkSession
     val vp = srcDir.getOrElse(throw new IllegalStateException(
       "addVectors requires a handle opened with IvfPq.load (save first, then load)"))
     IvfPq.encodeArrays(newVecs, model)
       .withColumn("fit", lit(false))
       .write.mode(SaveMode.Append).partitionBy("cluster")
       .parquet(s"$vp/ivfpq_codes")
-    val nNew = newVecs.count()
-    val total = spark.read.parquet(s"$vp/ivfpq_codes").count().toDouble
-    val unfit = if (fitRows >= 0) total - fitRows else nNew.toDouble
-    if (total == 0) 0.0 else math.max(0.0, unfit) / total
+    VectorIndex.drift(newVecs, s"$vp/ivfpq_codes", fitRows)
   }
 
   def query(queryVec: Array[Float], topK: Int,
@@ -307,7 +320,7 @@ class IvfPqIndex private[pipeline] (
   def save(basePath: String): Unit = {
     val spark = codesArr.sparkSession
     import spark.implicits._
-    val name = TableOps.nextArtifactDir(spark, basePath, "ivfpq")
+    val name = TableOps.nextArtifactDir(spark, basePath, kind)
     val vp = s"$basePath/$name"
     codesArr.write.mode(SaveMode.Overwrite)
       .partitionBy("cluster").parquet(s"$vp/ivfpq_codes")
@@ -321,6 +334,6 @@ class IvfPqIndex private[pipeline] (
     Seq((model.nlist, model.m, model.ksub, model.dim, n))
       .toDF("nlist", "m", "ksub", "dim", "n_fit_rows")
       .write.mode(SaveMode.Overwrite).parquet(s"$vp/ivfpq_meta")
-    TableOps.commitArtifactDir(spark, basePath, "ivfpq", name)
+    TableOps.commitArtifactDir(spark, basePath, kind, name)
   }
 }

@@ -167,74 +167,37 @@ class MemFuse(
         col("token_count"), col("embedding"), col("m0_raw_ids"),
         col("user_id"), col("session_id"), col("needs_embedding"),
         col("created_at"), col("created_at").as("updated_at"), col("metadata"))
-    val hasKw =
-      TableOps.currentArtifactDir(spark, path("index"), "kw").isDefined
-    val hasIvf =
-      TableOps.currentArtifactDir(spark, path("index"), "ivf").isDefined
-    val hasPq = hasPqIndex
-    val hasIvfPq = hasIvfPqIndex
-    if (hasKw || hasIvf || hasPq || hasIvfPq) m1New.persist()
+    val (kw, vec) = (kwIndex, vecIndex)
+    val indexed = kw.isDefined || vec.isDefined
+    if (indexed) m1New.persist()
     TableOps.appendBucketed(m1New, path("m1_episodic"))
     clearCache() // B5 cache: any write invalidates cached query results
     // incremental index maintenance (the reference maintains FTS5/DiskANN
     // per insert): upsert ONLY what this batch touches — new posting rows
     // in their term buckets, new vectors assigned to existing centroids —
-    // never a full rebuild. The IVF quantizer is re-fit only when the
+    // never a full rebuild. The quantizer is re-fit only when the
     // un-fit fraction crosses the drift threshold.
     val toIndex =
       if (preIndexedIds.isEmpty) m1New
       else m1New.filter(!col("chunk_id").isin(preIndexedIds: _*))
-    if (hasKw)
-      new KeywordIndex(spark, path("index")).addDocuments(
-        toIndex.select(col("chunk_id").as("doc_id"), col("content").as("text")))
-    if (hasIvf) {
-      val idx = openIvf()
-      val drift = idx.addVectors(
+    kw.foreach(_.addDocuments(
+      toIndex.select(col("chunk_id").as("doc_id"), col("content").as("text"))))
+    vec.foreach { h =>
+      val drift = h.addVectors(
         toIndex.select(col("chunk_id").as("vec_id"), col("embedding")), path("index"))
-      if (drift > IvfRefitDrift) {
-        IvfIndex.build(spark,
-          m1.select(col("chunk_id").as("vec_id"), col("embedding")), idx.nlist)
-          .save(path("index"))
+      if (drift > VectorIndex.RefitDrift) {
+        h.refit(m1Vectors).save(path("index"))
         resetTombstones() // full rebuild from live m1 carries no dead docs
       }
     }
-    if (hasPq) {
-      // same incremental contract as IVF: encode the batch against the
-      // EXISTING codebook, re-train past the drift threshold
-      val idx = openPq()
-      val drift = idx.addVectors(
-        toIndex.select(col("chunk_id").as("vec_id"), col("embedding")), path("index"))
-      if (drift > IvfRefitDrift) {
-        // re-train with the INDEX'S OWN geometry (m/ksub/dim), not the
-        // defaults — a drift rebuild must never silently change code
-        // size or recall characteristics
-        PqIndex.build(m1.select(col("chunk_id").as("vec_id"), col("embedding")),
-          m = idx.m, ksub = idx.ksub, dim = idx.dim).save(path("index"))
-        resetTombstones()
-      }
-    }
-    if (hasIvfPq) {
-      val idx = openIvfPq()
-      val drift = idx.addVectors(
-        toIndex.select(col("chunk_id").as("vec_id"), col("embedding")), path("index"))
-      if (drift > IvfRefitDrift) {
-        IvfPq.build(m1.select(col("chunk_id").as("vec_id"), col("embedding")),
-          nlist = idx.model.nlist, m = idx.model.m, ksub = idx.model.ksub,
-          dim = idx.model.dim).save(path("index"))
-        resetTombstones()
-      }
-    }
-    if (hasKw || hasIvf || hasPq || hasIvfPq) {
+    if (indexed) {
       m1New.unpersist()
-      indexHandles.synchronized {
-        ivfHandle = None; kwHandle = None; pqHandle = None; ivfPqHandle = None
-      }
+      dropIndexHandles()
     }
   }
 
-  /** Re-fit the IVF quantizer once more than this fraction of the table
-    * was assigned to centroids it was never fit on. */
-  private val IvfRefitDrift = 0.5
+  private def m1Vectors: DataFrame =
+    m1.select(col("chunk_id").as("vec_id"), col("embedding"))
 
   /** m0/m1 are read through the streaming committed view: on a table a
     * streaming writer ever touched, rows of half-flushed (uncommitted)
@@ -274,9 +237,14 @@ class MemFuse(
   private def cachedView(key: String)(build: => DataFrame): DataFrame =
     viewCache.getOrElseUpdate(key, build)
 
-  /** Drop cached table views (picks up writes made outside this facade,
-    * e.g. a streaming ingest running against the same warehouse). */
-  def refresh(): Unit = clearCache()
+  /** Drop cached table views and the held index handles (picks up
+    * writes made outside this facade, e.g. a streaming ingest running
+    * against the same warehouse — its index upkeep appends files a held
+    * handle's listing never sees). */
+  def refresh(): Unit = {
+    clearCache()
+    dropIndexHandles()
+  }
 
   /** F4 item-type filter over the metadata map (reference filters
     * messages/knowledge/chunks by metadata.type, numpy_store.py:532-546)
@@ -399,12 +367,7 @@ class MemFuse(
         val scopeN = chunks.count()
         if (scopeN == 0) base
         else {
-          val totalN =
-            if (TableOps.currentArtifactDir(spark, path("index"), "kw").isDefined)
-              openKw().nDocs
-            else if (hasIvfPqIndex) openIvfPq().nVectors
-            else if (hasPqIndex) openPq().nVectors
-            else openIvf().assigned.count()
+          val totalN = nIndexed
           val scale = math.max(1L, math.ceil(totalN.toDouble / scopeN).toLong)
           math.min(math.min(base.toLong * scale, math.max(totalN, base.toLong)),
             Int.MaxValue.toLong).toInt
@@ -414,29 +377,13 @@ class MemFuse(
 
     val vector =
       (if (useIndexes) {
-        // indexed candidates come from the m1 vector index — IVF probe
-        // or PQ ADC + exact rescore (rescored scores are the same
-        // trunc6'd cosines as the scan path, so fusion semantics don't
-        // depend on the backend); knowledge (a small side table, not
-        // vector-indexed) is scanned and unioned
-        val chunkIds = chunks.select(col("chunk_id"))
-        val qArr = encoder.encodeOne(text)
-        val vecHits =
-          (if (hasIvfPqIndex)
-            // probed-cell ADC candidates + exact rescore — like pq,
-            // the rescore returns the scan path's trunc6 cosines
-            openIvfPq().query(qArr, idxFetch, nProbe,
-              rescoreFrom = Some(m1.select(col("chunk_id").as("vec_id"),
-                col("embedding"))))
-          else if (hasPqIndex)
-            // fast=true: candidates from the codegen'd array scan (no
-            // explode, no exchange); exact rescore makes the returned
-            // scores backend-identical either way
-            openPq().query(qArr, idxFetch,
-              rescoreFrom = Some(m1.select(col("chunk_id").as("vec_id"),
-                col("embedding"))), fast = true)
-          else openIvf().query(qArr, idxFetch, nProbe))
-            .join(chunkIds, col("id") === col("chunk_id"), "left_semi")
+        // indexed candidates come from the m1 vector index, scored with
+        // the scan path's trunc6 cosines whatever the backend, so fusion
+        // semantics don't depend on it; knowledge (a small side table,
+        // not vector-indexed) is scanned and unioned
+        val vecHits = required(vecIndex)
+          .candidates(encoder.encodeOne(text), idxFetch, nProbe, m1Vectors)
+          .join(chunks.select(col("chunk_id")), col("id") === col("chunk_id"), "left_semi")
         knCorpus.fold(vecHits)(k => vecHits.unionByName(
           k.withColumn("score", trunc6(VectorFunctions.cosine(col("embedding"), qvec)))
             .select(col("chunk_id").as("id"), col("score"))))
@@ -451,7 +398,7 @@ class MemFuse(
 
     val keyword =
       (if (useIndexes)
-        openKw()
+        required(kwIndex)
           .bm25(terms, idxFetch)
           .join(chunks.select(col("chunk_id")), col("id") === col("chunk_id"), "left_semi")
       else
@@ -502,82 +449,50 @@ class MemFuse(
   }
 
   /** Build the persisted side indexes over the current m1 chunks: the
-    * term-bucket-partitioned BM25 postings (KeywordIndex) and ONE of
-    * the three vector backends — the cluster-partitioned IVF index
-    * (default), the product-quantized code table (`vectorIndex =
-    * "pq"`, 16 bytes/vector + exact rescore), or IVF-PQ
-    * (`"ivfpq"`, coarse cells + residual codes: partition-pruned
-    * probes AND compressed rows — the billion-vector layout; the
-    * reference similarly selects among pluggable vector stores,
-    * store/vector_store/).
+    * term-bucket-partitioned BM25 postings (KeywordIndex) and ONE vector
+    * index, the backend `vectorIndex` names ([[VectorIndex.build]]:
+    * cluster-partitioned IVF by default, or the pq / ivfpq code tables;
+    * the reference similarly selects among pluggable vector stores,
+    * store/vector_store/). The chosen family SUPERSEDES the others:
+    * their pointers are retired, so [[VectorIndex.open]] — which takes
+    * ivfpq, then pq, then ivf — finds exactly this one.
     * Per-batch upkeep is incremental (see [[ingest]]); a full rebuild
-    * is needed only after quantizer drift or bulk deletes. Index dirs
-    * are DERIVED data rewritten wholesale (plain Overwrite, not the
-    * manifest protocol): a query racing a rebuild should retry against
-    * the reopened handle — the same reopen-after-reindex contract as
-    * the reference's FTS5. */
+    * is needed only after quantizer drift or bulk deletes. Each build
+    * commits a fresh version dir with a pointer CAS: a query racing a
+    * rebuild keeps its own version, and the next open sees the new one
+    * — the same reopen-after-reindex contract as the reference's FTS5. */
   def buildIndexes(nlist: Int = 4, vectorIndex: String = "ivf"): Unit = {
     new KeywordIndex(spark, path("index"))
       .build(m1.select(col("chunk_id").as("doc_id"), col("content").as("text")))
-    val vecs = m1.select(col("chunk_id").as("vec_id"), col("embedding"))
-    // the chosen backend SUPERSEDES the others: retire the other
-    // families' pointers so an explicit switch actually takes effect
-    // (the query path would otherwise keep preferring a leftover pq)
-    vectorIndex match {
-      case "ivf" =>
-        IvfIndex.build(spark, vecs, nlist).save(path("index"))
-        TableOps.dropArtifactPointers(spark, path("index"), "pq")
-        TableOps.dropArtifactPointers(spark, path("index"), "ivfpq")
-      case "pq" =>
-        PqIndex.build(vecs).save(path("index"))
-        TableOps.dropArtifactPointers(spark, path("index"), "ivf")
-        TableOps.dropArtifactPointers(spark, path("index"), "ivfpq")
-      case "ivfpq" =>
-        IvfPq.build(vecs, nlist = nlist).save(path("index"))
-        TableOps.dropArtifactPointers(spark, path("index"), "ivf")
-        TableOps.dropArtifactPointers(spark, path("index"), "pq")
-      case other => throw new IllegalArgumentException(
-        s"vectorIndex must be ivf|pq|ivfpq, got $other")
-    }
+    VectorIndex.build(vectorIndex, m1Vectors, nlist).save(path("index"))
+    VectorIndex.Kinds.filter(_ != vectorIndex)
+      .foreach(TableOps.dropArtifactPointers(spark, path("index"), _))
     resetTombstones() // a full rebuild carries no deleted docs
-    // drop stale open handles; the next indexed query reopens
-    indexHandles.synchronized {
-      ivfHandle = None; kwHandle = None; pqHandle = None; ivfPqHandle = None
-    }
+    dropIndexHandles() // the next indexed query reopens
   }
 
   // open index handles, held like the reference holds its FTS/DiskANN
   // connections: centroids collected once, file listings resolved once —
-  // NOT once per query. Invalidated by buildIndexes.
+  // NOT once per query. A family found absent is looked up again on the
+  // next call. Invalidated by rebuilds, ingest upkeep and [[refresh]].
   @transient private object indexHandles
-  @transient private var ivfHandle: Option[IvfIndex] = None
   @transient private var kwHandle: Option[KeywordIndex] = None
-  @transient private var pqHandle: Option[PqIndex] = None
-  private def openIvf(): IvfIndex = indexHandles.synchronized {
-    ivfHandle.getOrElse {
-      val h = IvfIndex.load(spark, path("index")); ivfHandle = Some(h); h
-    }
+  @transient private var vecHandle: Option[VectorIndex] = None
+  private def kwIndex: Option[KeywordIndex] = indexHandles.synchronized {
+    if (kwHandle.isEmpty &&
+        TableOps.currentArtifactDir(spark, path("index"), "kw").isDefined)
+      kwHandle = Some(new KeywordIndex(spark, path("index")))
+    kwHandle
   }
-  private def openKw(): KeywordIndex = indexHandles.synchronized {
-    kwHandle.getOrElse {
-      val h = new KeywordIndex(spark, path("index")); kwHandle = Some(h); h
-    }
+  private def vecIndex: Option[VectorIndex] = indexHandles.synchronized {
+    if (vecHandle.isEmpty) vecHandle = VectorIndex.open(spark, path("index"))
+    vecHandle
   }
-  private def openPq(): PqIndex = indexHandles.synchronized {
-    pqHandle.getOrElse {
-      val h = PqIndex.load(spark, path("index")); pqHandle = Some(h); h
-    }
+  private def dropIndexHandles(): Unit = indexHandles.synchronized {
+    kwHandle = None; vecHandle = None
   }
-  @transient private var ivfPqHandle: Option[IvfPqIndex] = None
-  private def openIvfPq(): IvfPqIndex = indexHandles.synchronized {
-    ivfPqHandle.getOrElse {
-      val h = IvfPq.load(spark, path("index")); ivfPqHandle = Some(h); h
-    }
-  }
-  private def hasPqIndex: Boolean =
-    TableOps.currentArtifactDir(spark, path("index"), "pq").isDefined
-  private def hasIvfPqIndex: Boolean =
-    TableOps.currentArtifactDir(spark, path("index"), "ivfpq").isDefined
+  private def required[T](h: Option[T]): T = h.getOrElse(throw new IllegalStateException(
+    s"no side index under ${path("index")}: run buildIndexes() before useIndexes = true"))
 
   // ---------- delete-aware index maintenance ----------
   // The reference deletes per row from FTS5 / its vector stores
@@ -599,10 +514,12 @@ class MemFuse(
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
   }
 
-  private def indexesExist: Boolean =
-    TableOps.currentArtifactDir(spark, path("index"), "kw").isDefined ||
-      TableOps.currentArtifactDir(spark, path("index"), "ivf").isDefined ||
-      hasPqIndex || hasIvfPqIndex
+  private def indexesExist: Boolean = kwIndex.isDefined || vecIndex.isDefined
+
+  /** Documents the side indexes carry, live + tombstoned (the keyword
+    * index's count when it exists, else the vector index's). */
+  private def nIndexed: Long =
+    kwIndex.map(_.nDocs).orElse(vecIndex.map(_.nVectors)).getOrElse(0L)
 
   /** Record deleted chunk ids (no-op when no side index exists). The
     * input frame must be built over the PRE-delete snapshot. Writes are
@@ -627,118 +544,18 @@ class MemFuse(
     if (!indexesExist || !TableOps.exists(spark, tombstonePath)) return 0.0
     val nDead = tombstonesDf.select("doc_id").distinct().count().toDouble
     if (nDead == 0) return 0.0
-    val hasKw = TableOps.currentArtifactDir(spark, path("index"), "kw").isDefined
-    val nIndexed =
-      if (hasKw) openKw().nDocs.toDouble
-      else if (hasIvfPqIndex) openIvfPq().nVectors.toDouble
-      else if (hasPqIndex) openPq().nVectors.toDouble
-      else openIvf().assigned.count().toDouble
-    if (nIndexed == 0) 0.0 else math.min(1.0, nDead / nIndexed)
+    val n = nIndexed.toDouble
+    if (n == 0) 0.0 else math.min(1.0, nDead / n)
   }
 
   /** Rebuild whichever side indexes exist from the current (post-delete)
     * m1 and reset the tombstone log — triggered by [[maintain]]. */
   private def rebuildStaleIndexes(): Unit = {
-    val hasKw = TableOps.currentArtifactDir(spark, path("index"), "kw").isDefined
-    val hasIvf = TableOps.currentArtifactDir(spark, path("index"), "ivf").isDefined
-    if (hasKw)
-      new KeywordIndex(spark, path("index")).build(
-        m1.select(col("chunk_id").as("doc_id"), col("content").as("text")))
-    if (hasIvf) {
-      val nlist = openIvf().nlist
-      IvfIndex.build(spark,
-        m1.select(col("chunk_id").as("vec_id"), col("embedding")), nlist)
-        .save(path("index"))
-    }
-    // Quantizer reuse on tombstone rebuilds: a stale-fraction rebuild
-    // exists to DROP dead rows, not because the codebooks went bad. When
-    // the live table's drift (fraction the codebooks were never fit on)
-    // is still under [[IvfRefitDrift]], retraining from scratch every
-    // rebuild is pure waste — the x91 churn-phase data showed the Lloyd
-    // training job chain dominating the PQ maintain cycle. Below the
-    // threshold the rebuild is a SEMI-JOIN of the committed code table
-    // against the live chunk ids: every committed code (build-time or
-    // incrementally added) was encoded against these same codebooks, so
-    // a re-encode would reproduce it bit-identically — filtering IS the
-    // rebuild, and the corpus embeddings are never touched. Past the
-    // threshold, fall through to the full re-train. The carried fitRows
-    // is EXACT: code rows carry a fit flag (build-time rows true,
-    // incremental adds false), so the surviving-fit count is a filter +
-    // count — no proportional-delete assumption that skewed deletes
-    // (churning out the original fit corpus while post-fit adds survive)
-    // would otherwise exploit to under-report drift indefinitely.
-    def unfitFraction(nVectors: Long, fitRows: Long): Double =
-      if (fitRows < 0 || nVectors <= 0) 1.0
-      else math.max(0.0, (nVectors - fitRows).toDouble) / nVectors.toDouble
-    val liveIds = m1.select(col("chunk_id").as("vec_id"))
-    // Reuse-branch live code table: (1) semi-join committed codes
-    // against live ids — dropping dead rows IS the rebuild; (2) dedup
-    // per vec_id — delete + re-ingest of identical content appends a
-    // second bit-identical code row for the same content-addressed
-    // chunk_id (deletes only tombstone), which a full retrain used to
-    // purge; keeping an arbitrary one is safe and stops nVectors /
-    // drift denominators inflating; (3) re-encode live m1 rows the code
-    // table is MISSING (a batch that died between the m1 append and
-    // index upkeep — resetTombstones() zeroes the staleness signal, so
-    // this rebuild is the last chance to close that recall gap) against
-    // the EXISTING codebooks — deterministic, bit-compatible with the
-    // committed rows.
-    def liveCodeTable(codesArr: DataFrame,
-        encodeMissing: DataFrame => DataFrame): (DataFrame, Long) = {
-      val alive = codesArr.join(liveIds, Seq("vec_id"), "left_semi")
-      // duplicate rows are bit-identical codes; a chunk is "fit" if ANY
-      // of its rows is (it was in the training set), so the dedup takes
-      // max(fit) instead of an arbitrary survivor — deterministic fitRows
-      val keep =
-        if (codesArr.columns.contains("fit")) {
-          val rest = codesArr.columns.filter(c => c != "vec_id" && c != "fit")
-          alive.groupBy("vec_id").agg(max(col("fit")).as("fit"),
-            rest.map(c => first(col(c)).as(c)): _*)
-        } else alive.dropDuplicates("vec_id")
-      val missing = m1.select(col("chunk_id").as("vec_id"), col("embedding"))
-        .join(codesArr.select("vec_id"), Seq("vec_id"), "left_anti")
-      val merged = keep.unionByName(
-          encodeMissing(missing).withColumn("fit", lit(false)),
-          allowMissingColumns = true)
-        .localCheckpoint() // fit-count + save must read ONE materialization
-      // exact surviving-fit count via the flag; a legacy table without
-      // it yields nulls → counted unfit → drift over-estimates, which
-      // errs toward retraining, never toward stale recall
-      (merged, merged.filter(coalesce(col("fit"), lit(false))).count())
-    }
-    if (hasPqIndex) {
-      val idx = openPq()
-      val unfit = unfitFraction(idx.nVectors, idx.fitRows)
-      if (unfit > IvfRefitDrift)
-        PqIndex.build(m1.select(col("chunk_id").as("vec_id"), col("embedding")),
-          m = idx.m, ksub = idx.ksub, dim = idx.dim).save(path("index"))
-      else {
-        val (keep, fitSurvived) = liveCodeTable(idx.codesArr,
-          missing => PqIndex.encodeArrays(missing, idx.codebook.toSeq,
-            idx.m, idx.dim))
-        new PqIndex(idx.codebook, keep, idx.m, idx.dim,
-          fitRows = fitSurvived)
-          .save(path("index"))
-      }
-    }
-    if (hasIvfPqIndex) {
-      val idx = openIvfPq()
-      val unfit = unfitFraction(idx.nVectors, idx.fitRows)
-      if (unfit > IvfRefitDrift)
-        IvfPq.build(m1.select(col("chunk_id").as("vec_id"), col("embedding")),
-          nlist = idx.model.nlist, m = idx.model.m,
-          ksub = idx.model.ksub, dim = idx.model.dim).save(path("index"))
-      else {
-        val (keep, fitSurvived) = liveCodeTable(idx.codesArr,
-          missing => IvfPq.encodeArrays(missing, idx.model))
-        new IvfPqIndex(idx.model, keep, fitRows = fitSurvived)
-          .save(path("index"))
-      }
-    }
+    kwIndex.foreach(_.build(
+      m1.select(col("chunk_id").as("doc_id"), col("content").as("text"))))
+    vecIndex.foreach(_.withoutDead(m1Vectors).save(path("index")))
     resetTombstones()
-    indexHandles.synchronized {
-      ivfHandle = None; kwHandle = None; pqHandle = None; ivfPqHandle = None
-    }
+    dropIndexHandles()
   }
 
   /** J5 session fan-out, collapsed to one job: where the reference loops
@@ -819,8 +636,8 @@ class MemFuse(
       tables.foreach(t => TableOps.vacuum(spark, path(t), keepVersions))
       // superseded side-index and derived-layer versions (rebuilds keep
       // the previous version alive for handles opened before the rebuild)
-      TableOps.vacuumArtifacts(spark, path("index"), "kw", keepVersions)
-      TableOps.vacuumArtifacts(spark, path("index"), "ivf", keepVersions)
+      ("kw" +: VectorIndex.Kinds).foreach(
+        TableOps.vacuumArtifacts(spark, path("index"), _, keepVersions))
       TableOps.vacuumArtifacts(spark, path("m2"), "sem", keepVersions)
       TableOps.vacuumArtifacts(spark, path("episodes"), "ep", keepVersions)
     }

@@ -329,14 +329,13 @@ object PqIndex {
     new PqIndex(cb, codesArr, m, dim, fitRows = embeddings.count())
   }
 
-  private[pipeline] def resolvedDir(spark: SparkSession, basePath: String): String =
-    TableOps.currentArtifactDir(spark, basePath, "pq")
-      .map(v => s"$basePath/$v").getOrElse(basePath)
-
   /** Reopen a saved index — codebook to the driver, codes a lazy scan
     * pinned to the version committed at open time. */
-  def load(spark: SparkSession, basePath: String): PqIndex = {
-    val vp = resolvedDir(spark, basePath)
+  def load(spark: SparkSession, basePath: String): PqIndex =
+    loadDir(spark, VectorIndex.resolvedDir(spark, basePath, "pq"))
+
+  /** [[load]] from a resolved version dir. */
+  private[pipeline] def loadDir(spark: SparkSession, vp: String): PqIndex = {
     val cb = spark.read.parquet(s"$vp/pq_codebook").collect()
       .map(r => (r.getAs[Number]("sub").intValue(),
         r.getAs[Number]("code").intValue(),
@@ -367,7 +366,9 @@ class PqIndex private[pipeline] (
     val m: Int,
     val dim: Int,
     val fitRows: Long = -1L,
-    private val srcDir: Option[String] = None) {
+    private val srcDir: Option[String] = None) extends VectorIndex {
+
+  def kind: String = "pq"
 
   def ksub: Int = codebook.count(_._1 == 0)
 
@@ -379,6 +380,21 @@ class PqIndex private[pipeline] (
     * number can't change underneath it; same convention as
     * KeywordIndex.nDocs). One row per vector: a plain count. */
   @transient lazy val nVectors: Long = codesArr.count()
+
+  def ids: DataFrame = codesArr.select("vec_id")
+
+  /** `fast`: candidates from the codegen'd array scan (no explode, no
+    * exchange); the exact rescore makes the scores the scan path's. */
+  def candidates(q: Array[Float], k: Int, nProbe: Int,
+      embeddings: => DataFrame): DataFrame =
+    query(q, k, rescoreFrom = Some(embeddings), fast = true)
+
+  def refit(vecs: DataFrame): VectorIndex = PqIndex.build(vecs, m = m, ksub = ksub, dim = dim)
+
+  def withoutDead(liveVecs: DataFrame): VectorIndex =
+    VectorIndex.liveCodeRebuild(this, codesArr, liveVecs,
+      PqIndex.encodeArrays(_, codebook.toSeq, m, dim),
+      (codes, fit) => new PqIndex(codebook, codes, m, dim, fitRows = fit))
 
   /** Top-k ADC neighbors of `queryVec` (see [[PqIndex.adcTopK]]); pass
     * `rescoreFrom = Some(rawEmbeddings)` for the exact-rescored variant
@@ -407,7 +423,6 @@ class PqIndex private[pipeline] (
     * ratio (fraction of the table the codebook was never fit on); the
     * caller schedules a re-train past a threshold. */
   def addVectors(newVecs: DataFrame, basePath: String): Double = {
-    val spark = newVecs.sparkSession
     // a built-but-never-loaded handle has no version dir of its own —
     // appending into whatever dir happens to be committed would write
     // files this handle's codes scan never reads and skew the drift
@@ -416,10 +431,7 @@ class PqIndex private[pipeline] (
     PqIndex.encodeArrays(newVecs, codebook.toSeq, m, dim)
       .withColumn("fit", lit(false))
       .write.mode(SaveMode.Append).parquet(s"$vp/pq_codes")
-    val nNew = newVecs.count()
-    val total = spark.read.parquet(s"$vp/pq_codes").count().toDouble
-    val unfit = if (fitRows >= 0) total - fitRows else nNew.toDouble
-    if (total == 0) 0.0 else math.max(0.0, unfit) / total
+    VectorIndex.drift(newVecs, s"$vp/pq_codes", fitRows)
   }
 
   /** Persist codes + codebook + fit metadata into a fresh version dir,
@@ -427,7 +439,7 @@ class PqIndex private[pipeline] (
   def save(basePath: String): Unit = {
     val spark = codesArr.sparkSession
     import spark.implicits._
-    val name = TableOps.nextArtifactDir(spark, basePath, "pq")
+    val name = TableOps.nextArtifactDir(spark, basePath, kind)
     val vp = s"$basePath/$name"
     codesArr.write.mode(SaveMode.Overwrite).parquet(s"$vp/pq_codes")
     codebook.toSeq.map { case (s, c, v) => (s, c, v.toSeq) }
@@ -436,6 +448,6 @@ class PqIndex private[pipeline] (
     val n = if (fitRows >= 0) fitRows else codesArr.count()
     Seq((n, m, dim)).toDF("n_fit_rows", "m", "dim")
       .write.mode(SaveMode.Overwrite).parquet(s"$vp/pq_meta")
-    TableOps.commitArtifactDir(spark, basePath, "pq", name)
+    TableOps.commitArtifactDir(spark, basePath, kind, name)
   }
 }

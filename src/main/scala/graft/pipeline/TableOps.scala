@@ -547,14 +547,22 @@ object TableOps {
   private def artifactRe(prefix: String) = (prefix + "_v(\\d{8})").r
 
   /** Newest committed version dir name for `prefix`, if any. */
-  def currentArtifactDir(spark: SparkSession, base: String, prefix: String): Option[String] = {
+  def currentArtifactDir(spark: SparkSession, base: String, prefix: String): Option[String] =
+    currentArtifactDirs(spark, base, Seq(prefix)).get(prefix)
+
+  /** Newest committed version dir name per prefix that has one, from ONE
+    * listing of the pointer dir. */
+  def currentArtifactDirs(spark: SparkSession, base: String,
+      prefixes: Seq[String]): Map[String, String] = {
     val pd = ptrDir(base)
     val fs = fsOf(spark, pd)
-    if (!fs.exists(pd)) return None
-    val re = artifactRe(prefix)
-    val versions = fs.listStatus(pd).map(_.getPath.getName)
-      .collect { case re(n) => n.toLong }
-    if (versions.isEmpty) None else Some(f"${prefix}_v${versions.max}%08d")
+    if (!fs.exists(pd)) return Map.empty
+    val names = fs.listStatus(pd).map(_.getPath.getName)
+    prefixes.flatMap { prefix =>
+      val re = artifactRe(prefix)
+      names.collect { case re(n) => n.toLong }.maxOption
+        .map(v => prefix -> f"${prefix}_v$v%08d")
+    }.toMap
   }
 
   /** Name for the next version dir (build into `base/<name>/` first).

@@ -195,8 +195,13 @@ object StreamingIngest {
         // dual-queue flush 2/2: encoded chunk → m1_episodic. created_at
         // is the batch's max message time — deterministic under replay
         // (current_timestamp() would make replayed rows distinct)
+        // chunk id = hash of the batch's m0 ids + content: a replayed
+        // batch regenerates its id, while two batches of one session with
+        // the same text (two "ok thanks" turns) get distinct ids and
+        // survive the committed view's dedup by chunk_id
         val chunks = df
-          .withColumn("chunk_id", concat(col("session_id"), lit("#"), sha1(col("content"))))
+          .withColumn("chunk_id", concat(col("session_id"), lit("#"),
+            sha1(concat_ws("|", col("m0_raw_ids"), col("content")))))
           .withColumn("chunking_strategy", lit("token_based"))
           .withColumn("needs_embedding", lit(false))
           .withColumn("created_at",

@@ -309,6 +309,25 @@ class IndexSpec extends SparkSpec {
       "pq backend answers identically after the switch")
   }
 
+  test("maintain() vacuums the superseded versions of every vector family") {
+    val dir = graft.TempDirs.create("vacvec").toString
+    val engine = new MemFuse(spark, dir)
+    engine.ingest((1 to 6).map(i => Schemas.Message(s"m$i", s"s${i % 2}", "u1", s"r$i",
+      i, "user", s"spark partition note $i", ts(i))).toDF())
+    def versions(family: String) = new java.io.File(s"$dir/index").list()
+      .filter(_.matches(family + "_v\\d{8}")).sorted.toSeq
+    for (backend <- Seq("pq", "ivfpq")) {
+      (1 to 3).foreach(_ => engine.buildIndexes(nlist = 2, vectorIndex = backend))
+      assert(versions(backend).size == 3)
+      engine.maintain(keepVersions = 2)
+      assert(versions(backend) == Seq(s"${backend}_v00000001", s"${backend}_v00000002"),
+        s"$backend versions beyond keepVersions must be vacuumed")
+      assert(engine.query("spark partition", "u1", topK = 3, useIndexes = true,
+        nProbe = 2).count() == 3, s"the kept $backend version still answers")
+    }
+    assert(versions("kw").size == 2)
+  }
+
   test("pq stale rebuild re-encodes committed-but-unindexed live rows") {
     val dir = graft.TempDirs.create("pqgap").toString
     val engine = new MemFuse(spark, dir)

@@ -122,6 +122,55 @@ class StreamingSpec extends SparkSpec {
       assert(nCodes() == n0, "re-absorption must not duplicate code rows")
     }
 
+  test("refresh() reopens held index handles: a streamed chunk becomes index-reachable") {
+    implicit val sqlCtx = spark.sqlContext
+    val dir = graft.TempDirs.create("streamrefresh").toString
+    val engine = new graft.pipeline.MemFuse(spark, dir)
+    engine.ingest(Seq(
+      Schemas.Message("b1", "s1", "u1", "r1", 1, "user", "spark shuffle partition tuning", ts(1)),
+      Schemas.Message("b2", "s1", "u1", "r2", 2, "user", "broadcast join details", ts(2))).toDF())
+    engine.buildIndexes(nlist = 2)
+    // an indexed query opens the keyword and vector handles and holds them
+    engine.query("spark partition", "u1", topK = 3, useIndexes = true, nProbe = 2).collect()
+    val source = MemoryStream[Schemas.Message]
+    val q = StreamingIngest.start(source.toDS(), dir, HashingEncoder(),
+      maxTokens = 2, timeoutMs = 0, checkpoint = s"$dir/ckpt")
+    try {
+      source.addData(Schemas.Message("m9", "s1", "u1", "r9", 9, "user",
+        "zanzibar quorum replication", ts(9)))
+      q.processAllAvailable()
+    } finally q.stop()
+    engine.refresh()
+    def found(useIndexes: Boolean) = engine.query("zanzibar replication", "u1", topK = 3,
+      useIndexes = useIndexes, nProbe = 2).collect()
+      .exists(_.getAs[String]("content").contains("zanzibar"))
+    assert(found(useIndexes = false), "the scan path sees the streamed chunk")
+    assert(found(useIndexes = true), "the indexed path must see it after refresh()")
+  }
+
+  test("batches of one session with the same text keep one m1 chunk per message") {
+    implicit val sqlCtx = spark.sqlContext
+    val dir = graft.TempDirs.create("streamsametext").toString
+    val source = MemoryStream[Schemas.Message]
+    // maxTokens = 1: every message is oversized, so each is its own batch
+    val q = StreamingIngest.start(source.toDS(), dir, HashingEncoder(),
+      maxTokens = 1, timeoutMs = 0, checkpoint = s"$dir/ckpt",
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    try {
+      Seq("a1" -> "ok thanks", "a2" -> "ok thanks", "a3" -> "see you tomorrow")
+        .zipWithIndex.foreach { case ((id, text), i) =>
+          source.addData(Schemas.Message(id, "s1", "u1", s"r$i", i, "user", text, ts(i)))
+          q.processAllAvailable()
+        }
+    } finally q.stop()
+    val m0Ids = StreamingIngest.m0Committed(spark, dir)
+      .select("message_id").as[String].collect().sorted.toSeq
+    val lineage = StreamingIngest.m1Committed(spark, dir)
+      .select(explode(col("m0_raw_ids"))).as[String].collect().sorted.toSeq
+    assert(m0Ids == Seq("a1", "a2", "a3"))
+    assert(lineage == m0Ids, "every m0 id must be in exactly one m1 chunk")
+  }
+
   test("streaming ingest flushes the dual queue: m0 originals AND m1 chunks") {
     implicit val sqlCtx = spark.sqlContext
     val dir = graft.TempDirs.create("stream").toString
