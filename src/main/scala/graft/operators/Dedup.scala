@@ -18,37 +18,34 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Bounded cache slot for the minhash intermediates: at 100 TB the
-    * shingle arrays / band rows are *persisted index tables* built at
-    * ingest, not recomputed per query — this slot plays that role for
-    * repeated in-session calls (bench/tests). Holds at most one corpus;
-    * switching corpora unpersists the evicted entry, so nothing leaks
-    * (round-1's never-unpersisted `.cache()`s). */
-  private var sigSlot: Option[(Any, Seq[DataFrame], Long)] = None
-  private def cachedSigs(key: Any)(
-      build: => Seq[DataFrame]): (Seq[DataFrame], Long) =
-    synchronized {
-      sigSlot match {
-        case Some((k, dfs, bound)) if k == key => (dfs, bound)
-        case prev =>
-          prev.foreach(_._2.foreach(_.unpersist()))
-          val dfs = build.map(_.persist())
-          dfs.foreach(_.count()) // materialize once, eagerly
-          // banded-candidate volume bound: Σ_buckets n·(n−1)/2 over the
-          // persisted band rows — the pre-distinct pair-generation
-          // volume of the LSH bucket self-join. An ingest-time index
-          // stat (one cheap agg on the persisted frame, same convention
-          // as the artifacts themselves) that lets [[minhashLsh]] gate
-          // its verify-leg broadcasts without re-counting per query.
-          val row = dfs(1).groupBy(col("band"), col("bkey"))
-            .agg(count(lit(1)).as("n"))
-            .agg(sum(expr("n * (n - 1) div 2")).as("pairs"))
-            .head()
-          val bound = if (row.isNullAt(0)) 0L else row.getLong(0)
-          sigSlot = Some((key, dfs, bound))
-          (dfs, bound)
-      }
+  /** The minhash index of one corpus under one banding, shared by
+    * [[minhashLsh]] and [[minhashEstimatePairs]]:
+    *  - verify: per-doc shingle sets PRE-HASHED to fixed-width longs
+    *    (the span family's key trick: set and intersection sizes are
+    *    hash-invariant while xxhash64 is collision-free on a pair's
+    *    union — OperatorSpec pins the corpus-level claim; ~3× fewer
+    *    exchange bytes than the raw 3-gram strings)
+    *  - bandRows: (doc_id, band, bkey), the LSH candidate index
+    *  - sig: the (doc_id, mh0..mh{nh-1}) signature matrix the
+    *    agreement estimator scores with
+    * At 100 TB these are persisted index tables built at ingest. The
+    * caller owns that: it persists the frames and reuses the value
+    * across queries; [[minhashIndex]] itself persists nothing. */
+  final case class MinhashIndex(verify: DataFrame, bandRows: DataFrame,
+      sig: DataFrame) {
+    /** Banded-candidate volume bound: Σ_buckets n·(n−1)/2 over the band
+      * rows — the pre-distinct pair-generation volume of the LSH bucket
+      * self-join. One agg, taken once per index (on the persisted frame
+      * when the caller persisted it), that lets [[minhashLsh]] gate its
+      * verify-leg broadcasts without re-counting per query. */
+    lazy val pairBound: Long = {
+      val row = bandRows.groupBy(col("band"), col("bkey"))
+        .agg(count(lit(1)).as("n"))
+        .agg(sum(expr("n * (n - 1) div 2")).as("pairs"))
+        .head()
+      if (row.isNullAt(0)) 0L else row.getLong(0)
     }
+  }
 
   /** Exact dedup by content hash (T5; reference rag/retrieve/buffer.py:334-343
     * dedups on hash(content)). One row per distinct content: the kept
@@ -105,33 +102,17 @@ object Dedup {
     withMd5.select(col("doc_id") +: col("shingles") +: sigCols: _*)
   }
 
-  /** The session-index artifact triple shared by [[minhashLsh]] and
-    * [[minhashEstimatePairs]] — ONE cache key per (corpus, banding), so
-    * the two consumers never thrash the slot:
-    *  - verify: per-doc shingle sets PRE-HASHED to fixed-width longs
-    *    (the span family's key trick: set and intersection sizes are
-    *    hash-invariant while xxhash64 is collision-free on a pair's
-    *    union — OperatorSpec pins the corpus-level claim; ~3× fewer
-    *    exchange bytes than the raw 3-gram strings)
-    *  - band rows: (doc_id, band, bucket-key), the LSH candidate index
-    *  - sig: the (doc_id, mh0..mh{nh-1}) signature matrix the
-    *    agreement estimator scores with
-    * At 100 TB these are persisted index tables built at ingest; the
-    * slot plays that role for repeated in-session calls. */
-  private def sharedSigArtifacts(docs: DataFrame, shingleSize: Int,
-      bands: Int, rowsPerBand: Int): (Seq[DataFrame], Long) = {
-    val rawSharr = shingleArrays(docs, shingleSize)
-    val sig = minhashSignature(rawSharr, bands * rowsPerBand)
-    val rawBandRows = bandRows(sig, "doc_id", bands, rowsPerBand)
-    val rawVerify = rawSharr.select(col("doc_id"),
-      transform(col("shingles"), s => xxhash64(s)).as("sh_h"))
-    // the FULL (canonicalized corpus plan, banding) tuple, compared by
-    // structural equality — the r13 32-bit composite hashCode could
-    // collide across corpora/parameters and silently serve the wrong
-    // cached frames to both consumers (r13 advice)
-    val key = (rawSharr.queryExecution.analyzed.canonicalized,
-      bands, rowsPerBand)
-    cachedSigs(key)(Seq(rawVerify, rawBandRows, sig.drop("shingles")))
+  /** Build the [[MinhashIndex]] of `docs` (numHashes = bands ×
+    * rowsPerBand): plans only, nothing persisted or run. */
+  def minhashIndex(docs: DataFrame, shingleSize: Int, bands: Int,
+      rowsPerBand: Int): MinhashIndex = {
+    val sharr = shingleArrays(docs, shingleSize)
+    val sig = minhashSignature(sharr, bands * rowsPerBand)
+    MinhashIndex(
+      verify = sharr.select(col("doc_id"),
+        transform(col("shingles"), s => xxhash64(s)).as("sh_h")),
+      bandRows = bandRows(sig, "doc_id", bands, rowsPerBand),
+      sig = sig.drop("shingles"))
   }
 
   /** LSH candidates scored by the SIGNATURE-AGREEMENT estimate
@@ -145,16 +126,21 @@ object Dedup {
     * the caller calibrates the cut to the estimator's variance). */
   def minhashEstimatePairs(docs: DataFrame, shingleSize: Int = 3,
       bands: Int = 4, rowsPerBand: Int = 2,
-      ordered: Boolean = false): DataFrame = {
-    val nh = bands * rowsPerBand
-    // the signature matrix and band rows are the SAME session-index
-    // artifacts [[minhashLsh]] reads (one md5 family, one cache key):
-    // built once per corpus at ingest time, so the estimator's timed
-    // cost is the candidate join + the agreement scoring — not a
-    // per-query rebuild of the index (r13: the localCheckpoint here
-    // recomputed the md5 transform every run, ~1.7 s of q106's 2.0 s)
-    val (Seq(_, banded, sig), _) = sharedSigArtifacts(docs, shingleSize,
-      bands, rowsPerBand)
+      ordered: Boolean = false): DataFrame =
+    minhashEstimatePairs(minhashIndex(docs, shingleSize, bands, rowsPerBand),
+      ordered)
+
+  /** [[minhashEstimatePairs]] over a caller-owned index — the SAME
+    * signature matrix and band rows [[minhashLsh]] reads (one md5
+    * family). Built once per corpus at ingest time and persisted, the
+    * estimator's timed cost is the candidate join + the agreement
+    * scoring — not a per-query rebuild of the index (r13: the
+    * localCheckpoint here recomputed the md5 transform every run,
+    * ~1.7 s of q106's 2.0 s). */
+  def minhashEstimatePairs(index: MinhashIndex,
+      ordered: Boolean): DataFrame = {
+    val (banded, sig) = (index.bandRows, index.sig)
+    val nh = sig.columns.length - 1 // doc_id, then one column per hash
     val candidates = banded.toDF("doc_a", "band", "bkey")
       .join(banded.toDF("doc_b", "band", "bkey"), Seq("band", "bkey"))
       .filter(col("doc_a") < col("doc_b"))
@@ -241,13 +227,21 @@ object Dedup {
       jaccardThreshold: Double = 0.5,
       salts: Int = 1,
       ordered: Boolean = false,
-      maxBroadcastPairs: Long = 8L * 1000 * 1000): DataFrame = {
-    val (Seq(verify, cachedBandRows, _), pairBound) = sharedSigArtifacts(docs,
-      shingleSize, bands, rowsPerBand)
+      maxBroadcastPairs: Long = MaxBroadcastPairs): DataFrame =
+    minhashLsh(minhashIndex(docs, shingleSize, bands, rowsPerBand),
+      jaccardThreshold, salts, ordered, maxBroadcastPairs)
+
+  /** [[minhashLsh]]'s default broadcast-gate bound (see the operating
+    * envelope below). */
+  private[graft] val MaxBroadcastPairs: Long = 8L * 1000 * 1000
+
+  /** [[minhashLsh]] over a caller-owned index (see [[MinhashIndex]]). */
+  def minhashLsh(index: MinhashIndex, jaccardThreshold: Double, salts: Int,
+      ordered: Boolean, maxBroadcastPairs: Long): DataFrame = {
     // hot buckets (boilerplate corpora) fan out over salted sub-keys
     // when salts > 1 — identical pairs, spread workload (SkewOps)
-    val xa = cachedBandRows.toDF("doc_a", "band", "bkey")
-    val yb = cachedBandRows.toDF("doc_b", "band", "bkey")
+    val xa = index.bandRows.toDF("doc_a", "band", "bkey")
+    val yb = index.bandRows.toDF("doc_b", "band", "bkey")
     val bucketJoin =
       if (salts > 1) SkewOps.saltedSelfJoin(xa, yb, Seq("band", "bkey"), "doc_b", salts)
       else xa.join(yb, Seq("band", "bkey"))
@@ -269,9 +263,9 @@ object Dedup {
     // candidate set pair-sparse on real corpora. Under adversarial
     // hot buckets (boilerplate corpora: banded candidates go
     // bucket-quadratic) the broadcast is the limit, so the formulation
-    // is GATED (r13 verdict #2): the cached ingest-time candidate
-    // volume bound (Σ_buckets n·(n−1)/2, pre-distinct — computed once
-    // per corpus with the artifacts, never per query) must sit within
+    // is GATED (r13 verdict #2): the index's candidate volume bound
+    // (Σ_buckets n·(n−1)/2, pre-distinct — computed once per index,
+    // never per query on a reused index) must sit within
     // `maxBroadcastPairs`; past it the verify legs degrade to planner-
     // chosen shuffle joins — identical pairs, no 8 GB broadcast
     // ceiling — instead of failing on the broadcast. `salts` (identical
@@ -284,10 +278,10 @@ object Dedup {
           (size(col("sh_a")) + size(col("sh_b")) - col("n_inter"))))
       .filter(col("jaccard") >= jaccardThreshold)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
-    val va = verify.select(col("doc_id").as("doc_a"), col("sh_h").as("sh_a"))
-    val vb = verify.select(col("doc_id").as("doc_b"), col("sh_h").as("sh_b"))
+    val va = index.verify.select(col("doc_id").as("doc_a"), col("sh_h").as("sh_a"))
+    val vb = index.verify.select(col("doc_id").as("doc_b"), col("sh_h").as("sh_b"))
     val out =
-      if (pairBound <= maxBroadcastPairs)
+      if (index.pairBound <= maxBroadcastPairs)
         scored(vb.join(broadcast(va.join(broadcast(candidates), "doc_a")),
           "doc_b"))
       else

@@ -952,18 +952,19 @@ class MemFuse(
   // quality gate ≥0.7 → storage supplement) ----------
 
   private val resultCache =
-    new java.util.LinkedHashMap[String, Array[org.apache.spark.sql.Row]](16, 0.75f, true) {
+    new java.util.LinkedHashMap[(String, String, Int), Array[org.apache.spark.sql.Row]](16, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[String, Array[org.apache.spark.sql.Row]]): Boolean =
+          e: java.util.Map.Entry[(String, String, Int), Array[org.apache.spark.sql.Row]]): Boolean =
         size() > 100 // reference cache_size=100
     }
 
-  /** Cached hybrid query: driver-side LRU keyed by
-    * (query|user|topK) — the Spark analogue of QueryBuffer's result
-    * cache. Returns collected rows (the API-response shape). */
+  /** Cached hybrid query: driver-side LRU keyed by the (query, user,
+    * topK) tuple — no joined string, so no two tenants' keys can meet —
+    * the Spark analogue of QueryBuffer's result cache. Returns collected
+    * rows (the API-response shape). */
   def queryCached(text: String, userId: String, topK: Int = 5): Array[org.apache.spark.sql.Row] =
     resultCache.synchronized {
-      val key = s"$text|$userId|$topK"
+      val key = (text, userId, topK)
       val hit = resultCache.get(key)
       if (hit != null) hit
       else {

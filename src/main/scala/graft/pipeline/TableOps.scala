@@ -6,6 +6,7 @@ import java.util.UUID
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Literal, Pmod, XxHash64}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -55,14 +56,12 @@ object TableOps {
   def withUserBucket(df: DataFrame): DataFrame =
     df.withColumn("user_bucket", userBucket)
 
-  /** Bucket id of one user — evaluated through the same engine expression
-    * as the write path (a one-row local job, memoized). */
+  /** Bucket id of one user: [[userBucket]]'s pmod(xxhash64(·), 16) over
+    * a literal, evaluated on the driver — no job, nothing memoized.
+    * TableOpsSpec pins it to the `user_bucket` the write path stores. */
   def bucketOf(spark: SparkSession, userId: String): Long =
-    bucketCache.getOrElseUpdate(userId, {
-      import spark.implicits._
-      Seq(userId).toDF("user_id").select(userBucket).head().getLong(0)
-    })
-  private val bucketCache = scala.collection.concurrent.TrieMap.empty[String, Long]
+    Pmod(new XxHash64(Seq(Literal(userId))), Literal(BucketCount.toLong))
+      .eval().asInstanceOf[Long]
 
   // ---------- manifest log ----------
 

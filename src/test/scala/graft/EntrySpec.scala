@@ -7,11 +7,29 @@ class EntrySpec extends SparkSpec {
   }
 
   test("every registered query runs at sf0.001") {
-    val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      try { fn(spark, sf()).count(); None }
-      catch { case e: Throwable => Some(s"$name: ${e.getMessage.take(100)}") }
+    // one collect() per query, shared with DeterminismSpec's first run
+    val failures = QueryPass.first(spark, sf()).collect {
+      case (name, Left(e)) => s"$name: ${e.getMessage.take(100)}"
     }
     assert(failures.isEmpty, failures.mkString("; "))
+  }
+
+  test("q29 and q106 share one persisted minhash index, built once") {
+    // a private copy of the documents: no registry entry exists for this
+    // dataset dir yet, whatever ran earlier in the JVM
+    val d = graft.TempDirs.create("minhash_fixture").toString
+    java.nio.file.Files.copy(java.nio.file.Paths.get(sf(), "documents.parquet"),
+      java.nio.file.Paths.get(d, "documents.parquet"))
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted
+    val runs = Seq("q29_minhash_lsh", "q106_minhash_estimate",
+        "q29_minhash_lsh", "q106_minhash_estimate")
+      .map(name => QueryPass.rows(SparkEntry.queries(name)(spark, d)))
+    val after = persisted
+    assert((before -- after).isEmpty, "nothing already persisted is dropped")
+    assert((after -- before).size == 3,
+      s"one index set (verify, band rows, signatures): ${after -- before}")
+    assert(runs(0).nonEmpty && runs(0) == runs(2) && runs(1) == runs(3))
   }
 
   test("oracle coverage: every query has oracle SQL, none orphaned") {

@@ -83,6 +83,15 @@ class OperatorSpec extends SparkSpec {
     assert(pairs.toSeq == Seq((1L, 2L)))
   }
 
+  test("docs-taking minhash calls build their index inline and persist nothing") {
+    val base = (1 to 40).map(i => s"state$i").mkString(" ")
+    val docs = (1L to 12L).map(i => (i, s"$base v${i % 3}")).toDF("doc_id", "text")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    assert(Dedup.minhashLsh(docs, jaccardThreshold = 0.5).count() > 0)
+    assert(Dedup.minhashEstimatePairs(docs).count() > 0)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+  }
+
   test("simhash: similar docs closer in hamming distance than dissimilar") {
     val base = (1 to 40).map(i => s"tok$i").mkString(" ")
     val near = (1 to 40).map(i => if (i % 13 == 0) "x" else s"tok$i").mkString(" ")

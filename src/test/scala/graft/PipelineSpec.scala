@@ -183,6 +183,20 @@ class PipelineSpec extends SparkSpec {
     assert(engine.queryCached("alpha beta", "u1", topK = 3).isEmpty)
   }
 
+  test("result cache keys by (text, user, topK): joined-key twins stay apart") {
+    val (engine, _) = freshEngine()
+    engine.ingest(Seq(
+      msg("m1", "s1", "x", "r1", 1, "user", "a u1 alpha beta"),
+      msg("m2", "s2", "u1|x", "r2", 1, "user", "a delta epsilon")).toDF())
+    // ("a|u1", "x") and ("a", "u1|x") join to the same "a|u1|x|5"
+    val first = engine.queryCached("a|u1", "x", topK = 5)
+    val second = engine.queryCached("a", "u1|x", topK = 5)
+    assert(first.nonEmpty && first.forall(_.getAs[String]("content").contains("alpha")))
+    assert(second.nonEmpty, "the second tenant has a matching chunk")
+    assert(second.forall(_.getAs[String]("content").contains("delta")),
+      "a tenant must never be served another tenant's cached rows")
+  }
+
   test("messagesBySession: ordered, limited, capped at 100") {
     val (engine, _) = freshEngine()
     engine.ingest((1 to 30).map(i =>

@@ -81,6 +81,23 @@ class TableOpsSpec extends SparkSpec {
       .collect().sorted.toSeq == (3 to 6).map(i => s"m$i"))
   }
 
+  test("bucketOf equals the user_bucket the write path stores, for any id") {
+    val dir = tmp("bucketof")
+    val t = java.sql.Timestamp.valueOf("2024-06-01 00:00:00")
+    val ids = (0 until 190).map(i => s"user_$i") ++ Seq("", " ", "|", "a|b",
+      "u1|x", "ü", "naïve|café", "日本語", "emoji \uD83D\uDE42", "x" * 300)
+    TableOps.appendBucketed(ids.zipWithIndex.map { case (u, i) => (s"m$i", u, t) }
+      .toDF("message_id", "user_id", "created_at"), dir)
+    // the bucket a row was WRITTEN to is its user_bucket=N partition dir
+    val written = TableOps.read(spark, dir).select(col("user_id"),
+        regexp_extract(input_file_name(), "user_bucket=(\\d+)", 1).cast("long"))
+      .as[(String, Long)].collect()
+    assert(written.map(_._1).sorted.toSeq == ids.sorted)
+    assert(written.map(_._2).distinct.length == TableOps.BucketCount)
+    val wrong = written.filter { case (u, b) => TableOps.bucketOf(spark, u) != b }
+    assert(wrong.isEmpty, wrong.take(5).mkString(", "))
+  }
+
   test("concurrent appends from racing threads all land") {
     val dir = tmp("appends")
     val threads = (1 to 4).map { i =>
