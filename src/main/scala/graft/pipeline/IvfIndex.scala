@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
 class IvfIndex private[pipeline] (
     val centroids: Array[(Int, Array[Double])],
     val assigned: DataFrame,
-    val fitRows: Long = -1L,
+    val fitRows: Long,
     // the version dir this handle was opened from: incremental adds go
     // HERE, never to a version committed after open (whose centroids
     // this handle does not hold)
@@ -93,7 +93,7 @@ class IvfIndex private[pipeline] (
       .select("vec_id", "embedding", "cluster")
       .write.mode(SaveMode.Append).partitionBy("cluster")
       .parquet(s"$vp/ivf_assigned")
-    VectorIndex.drift(newVecs, s"$vp/ivf_assigned", fitRows)
+    VectorIndex.drift(newVecs.sparkSession, s"$vp/ivf_assigned", fitRows)
   }
 
   /** Persist the index: assignments partitioned by `cluster` (the probe
@@ -112,9 +112,7 @@ class IvfIndex private[pipeline] (
     centroids.toSeq.map { case (i, c) => (i, c.toSeq) }
       .toDF("cluster", "centroid")
       .write.mode(SaveMode.Overwrite).parquet(s"$vp/ivf_centroids")
-    val n = if (fitRows >= 0) fitRows
-      else spark.read.parquet(s"$vp/ivf_assigned").count()
-    Seq(n).toDF("n_fit_rows")
+    Seq(fitRows).toDF("n_fit_rows")
       .write.mode(SaveMode.Overwrite).parquet(s"$vp/ivf_meta")
     TableOps.commitArtifactDir(spark, basePath, kind, name)
   }
@@ -158,7 +156,7 @@ object IvfIndex {
     * stay a lazy partitioned scan pinned to the version dir committed at
     * open time (a concurrent rebuild never yanks this handle's files). */
   def load(spark: SparkSession, basePath: String): IvfIndex =
-    loadDir(spark, VectorIndex.resolvedDir(spark, basePath, "ivf"))
+    loadDir(spark, VectorIndex.committedDir(spark, basePath, "ivf"))
 
   /** [[load]] from a resolved version dir. */
   private[pipeline] def loadDir(spark: SparkSession, vp: String): IvfIndex = {
@@ -167,11 +165,7 @@ object IvfIndex {
       .map(r => (r.getAs[Number]("cluster").intValue(),
         r.getAs[scala.collection.Seq[Double]]("centroid").toArray))
     val assigned = spark.read.parquet(s"$vp/ivf_assigned")
-    val metaPath = new org.apache.hadoop.fs.Path(s"$vp/ivf_meta")
-    val fitRows =
-      if (metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(metaPath))
-        spark.read.parquet(metaPath.toString).head().getLong(0)
-      else -1L
+    val fitRows = spark.read.parquet(s"$vp/ivf_meta").head().getLong(0)
     new IvfIndex(centroids, assigned, fitRows, srcDir = Some(vp))
   }
 }

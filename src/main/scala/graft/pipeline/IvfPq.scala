@@ -234,7 +234,7 @@ object IvfPq {
     * cluster-partitioned scan pinned to the version committed at open
     * time (pointer-CAS lifecycle shared with the other indexes). */
   def load(spark: SparkSession, basePath: String): IvfPqIndex =
-    loadDir(spark, VectorIndex.resolvedDir(spark, basePath, "ivfpq"))
+    loadDir(spark, VectorIndex.committedDir(spark, basePath, "ivfpq"))
 
   /** [[load]] from a resolved version dir. */
   private[pipeline] def loadDir(spark: SparkSession, vp: String): IvfPqIndex = {
@@ -262,7 +262,7 @@ object IvfPq {
 class IvfPqIndex private[pipeline] (
     val model: IvfPq.Model,
     val codesArr: DataFrame,
-    val fitRows: Long = -1L,
+    val fitRows: Long,
     private val srcDir: Option[String] = None) extends VectorIndex {
 
   def kind: String = "ivfpq"
@@ -301,7 +301,7 @@ class IvfPqIndex private[pipeline] (
       .withColumn("fit", lit(false))
       .write.mode(SaveMode.Append).partitionBy("cluster")
       .parquet(s"$vp/ivfpq_codes")
-    VectorIndex.drift(newVecs, s"$vp/ivfpq_codes", fitRows)
+    VectorIndex.drift(newVecs.sparkSession, s"$vp/ivfpq_codes", fitRows)
   }
 
   def query(queryVec: Array[Float], topK: Int,
@@ -330,8 +330,7 @@ class IvfPqIndex private[pipeline] (
         .write.mode(SaveMode.Overwrite).parquet(s"$vp/$sub")
     writeCb(model.coarse, "ivfpq_coarse")
     writeCb(model.pq, "ivfpq_codebook")
-    val n = if (fitRows >= 0) fitRows else codesArr.count()
-    Seq((model.nlist, model.m, model.ksub, model.dim, n))
+    Seq((model.nlist, model.m, model.ksub, model.dim, fitRows))
       .toDF("nlist", "m", "ksub", "dim", "n_fit_rows")
       .write.mode(SaveMode.Overwrite).parquet(s"$vp/ivfpq_meta")
     TableOps.commitArtifactDir(spark, basePath, kind, name)

@@ -1,51 +1,44 @@
 package graft.pipeline
 
 import graft.functions.TextFunctions.{dsum12, tokens, trunc6}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persisted inverted index for keyword/BM25 retrieval — the engine-side
   * replacement for the reference's SQLite FTS5 side index
   * (store/keyword_store/sqlite_store.py:93-145).
   *
-  * Layout: `postings(term, doc_id, tf)` written partitioned by a 64-way
-  * term hash bucket (a query's terms prune to a handful of partitions),
-  * plus `doclen(doc_id, dl)` and a single-row `stats(n_docs, avgdl)`.
+  * Layout, inside the committed `kw` version dir: `postings(term, doc_id,
+  * tf)` written partitioned by a 64-way term hash bucket (a query's terms
+  * prune to a handful of partitions), plus `doclen(doc_id, dl)` and a
+  * single-row `stats(n_docs, avgdl)`.
   * Query time never touches the raw corpus: score = join of the query's
   * posting slices with broadcast df/stats — at 100 TB this is the
   * difference between a corpus scan per query and an index lookup.
   */
 class KeywordIndex(spark: SparkSession, basePath: String) {
+  import KeywordIndex.termBucket
 
   // the version dir resolves ONCE, at the handle's first READ, and pins:
   // the handle holds that snapshot through any concurrent rebuild
-  // (versioned dirs + pointer CAS, TableOps.commitArtifactDir — the old
-  // Overwrite-in-place rebuild could delete files under a racing query).
-  // A handle that read before a rebuild keeps serving the OLD version by
-  // design — reopen to see the new one (the reference's
-  // reopen-after-reindex semantics).
-  @transient private lazy val verDir: Option[String] =
-    TableOps.currentArtifactDir(spark, basePath, "kw")
+  // (versioned dirs + pointer CAS, TableOps.commitArtifactDir). A handle
+  // that read before a rebuild keeps serving the OLD version by design —
+  // reopen to see the new one (the reference's reopen-after-reindex
+  // semantics). With no committed version the first read throws.
+  @transient private lazy val verDir: String =
+    TableOps.committedArtifactPath(spark, basePath, "kw", "buildIndexes()")
 
-  private def p(t: String) = verDir match {
-    case Some(v) => s"$basePath/$v/$t"
-    case None    => s"$basePath/kw_$t" // pre-versioning layout
-  }
-
-  // incremental stats updates land as tiny versioned dirs committed with
-  // a pointer CAS (never an in-place overwrite a racing read could
-  // half-see); base dir = this handle's version dir
-  private def statsBase: String = verDir match {
-    case Some(v) => s"$basePath/$v"
-    case None    => basePath
-  }
+  private def p(t: String) = s"$verDir/$t"
 
   // one handle = one file-listing/schema-read per table
   @transient private lazy val postingsDf = spark.read.parquet(p("postings"))
   @transient private lazy val doclenDf = spark.read.parquet(p("doclen"))
+  // incremental stats updates land as tiny versioned dirs inside the
+  // version dir, committed with a pointer CAS (never an in-place
+  // overwrite a racing read could half-see)
   @transient private lazy val statsDf =
-    TableOps.currentArtifactDir(spark, statsBase, "stats_upd") match {
-      case Some(v) => spark.read.parquet(s"$statsBase/$v")
+    TableOps.currentArtifactDir(spark, verDir, "stats_upd") match {
+      case Some(v) => spark.read.parquet(s"$verDir/$v")
       case None    => spark.read.parquet(p("stats")) // build-time stats
     }
 
@@ -54,7 +47,7 @@ class KeywordIndex(spark: SparkSession, basePath: String) {
     def np(t: String) = s"$basePath/$name/$t"
     val tok = docs.select(col("doc_id"), explode(tokens(col("text"))).as("term"))
     tok.groupBy("term", "doc_id").agg(count(lit(1)).as("tf"))
-      .withColumn("term_bucket", pmod(xxhash64(col("term")), lit(64)))
+      .withColumn("term_bucket", termBucket)
       .write.mode(SaveMode.Overwrite).partitionBy("term_bucket").parquet(np("postings"))
     // doc length is a narrow projection — no need to re-aggregate the explode
     val docLen = docs.select(
@@ -82,24 +75,24 @@ class KeywordIndex(spark: SparkSession, basePath: String) {
     * after [[build]]. The appends land inside the CURRENT version dir
     * (this handle's snapshot); the refreshed corpus stats commit as a
     * tiny versioned dir with a pointer CAS, so a racing read always
-    * resolves a complete stats file (the last in-place overwrite gone). */
+    * resolves a complete stats file. */
   def addDocuments(docs: DataFrame): Unit = {
     val tok = docs.select(col("doc_id"), explode(tokens(col("text"))).as("term"))
     tok.groupBy("term", "doc_id").agg(count(lit(1)).as("tf"))
-      .withColumn("term_bucket", pmod(xxhash64(col("term")), lit(64)))
+      .withColumn("term_bucket", termBucket)
       .write.mode(SaveMode.Append).partitionBy("term_bucket").parquet(p("postings"))
     val docLen = docs.select(
       col("doc_id"), size(tokens(col("text"))).cast("long").as("dl"))
     docLen.write.mode(SaveMode.Append).parquet(p("doclen"))
-    val name = TableOps.nextArtifactDir(spark, statsBase, "stats_upd")
+    val name = TableOps.nextArtifactDir(spark, verDir, "stats_upd")
     spark.read.parquet(p("doclen")).agg(
       count(lit(1)).as("n_docs"),
       (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$statsBase/$name")
-    TableOps.commitArtifactDir(spark, statsBase, "stats_upd", name)
+      .write.mode(SaveMode.Overwrite).parquet(s"$verDir/$name")
+    TableOps.commitArtifactDir(spark, verDir, "stats_upd", name)
     // superseded stats generations are micro-dirs; GC all but the newest
     // two so per-batch adds don't accumulate clutter
-    TableOps.vacuumArtifacts(spark, statsBase, "stats_upd", keep = 2)
+    TableOps.vacuumArtifacts(spark, verDir, "stats_upd", keep = 2)
   }
 
   /** Documents the index carries (live + tombstoned — the denominator of
@@ -117,12 +110,8 @@ class KeywordIndex(spark: SparkSession, basePath: String) {
   def bm25(queryTerms: Seq[String], topK: Int,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     val terms = queryTerms.distinct
-    // resolve the terms' partition buckets with the same xxhash64 expression
-    // used at write time (tiny local job)
-    import spark.implicits._
-    val buckets = terms.toDF("term")
-      .select(pmod(xxhash64(col("term")), lit(64)).as("b"))
-      .as[Long].collect().distinct.toSeq
+    // the terms' partition buckets, evaluated on the driver (no job)
+    val buckets = terms.map(KeywordIndex.termBucketOf).distinct
     val postings = postingsDf
       .filter(col("term_bucket").isin(buckets: _*)) // partition pruning
       .filter(col("term").isin(terms: _*))
@@ -146,4 +135,17 @@ class KeywordIndex(spark: SparkSession, basePath: String) {
       .orderBy(col("score").desc, col("id"))
       .limit(topK)
   }
+}
+
+object KeywordIndex {
+
+  /** Term hash buckets the postings are partitioned by. */
+  private val TermBuckets = 64
+
+  /** The `term_bucket` partition column: pmod(xxhash64(term), 64). */
+  private def termBucket: Column = pmod(xxhash64(col("term")), lit(TermBuckets))
+
+  /** [[termBucket]] of one term, evaluated on the driver. IndexSpec pins
+    * it to the `term_bucket=N` dir the postings are written under. */
+  private[graft] def termBucketOf(term: String): Long = TableOps.hashBucket(term, TermBuckets)
 }

@@ -1061,8 +1061,7 @@ class MemFuse(
     * A rebuild materializes a complete VERSION dir and commits it with
     * one pointer CAS (TableOps.commitArtifactDir — the kw/ivf pattern):
     * a query that resolved the layer before the rebuild (the q59-style
-    * graph leg included) keeps reading its own version's files; the old
-    * in-place Overwrite could delete files under a racing reader.
+    * graph leg included) keeps reading its own version's files.
     * [[maintain]] vacuums superseded versions. */
   def buildSemanticLayer(): Unit = {
     val name = TableOps.nextArtifactDir(spark, path("m2"), "sem")
@@ -1077,14 +1076,12 @@ class MemFuse(
     TableOps.commitArtifactDir(spark, path("m2"), "sem", name)
   }
 
-  /** Resolve one m2 table in the newest committed layer version (legacy
-    * flat layout as fallback — pre-versioning warehouses). Resolution
-    * happens when the FRAME is built, pinning it to that version. */
-  private def m2Table(table: String): DataFrame =
-    TableOps.currentArtifactDir(spark, path("m2"), "sem") match {
-      case Some(v) => spark.read.parquet(s"${path("m2")}/$v/$table")
-      case None    => spark.read.parquet(path(table))
-    }
+  /** Resolve one m2 table in the newest committed layer version (throws
+    * before the first [[buildSemanticLayer]]). Resolution happens when
+    * the FRAME is built, pinning it to that version. */
+  private def m2Table(table: String): DataFrame = spark.read.parquet(
+    TableOps.committedArtifactPath(spark, path("m2"), "sem", "buildSemanticLayer()") +
+      s"/$table")
 
   def m2Facts: DataFrame = m2Table("m2_facts")
   def m2Vertices: DataFrame = m2Table("m2_vertices")
@@ -1101,11 +1098,11 @@ class MemFuse(
     TableOps.commitArtifactDir(spark, path("episodes"), "ep", name)
   }
 
-  def episodes: DataFrame =
-    TableOps.currentArtifactDir(spark, path("episodes"), "ep") match {
-      case Some(v) => spark.read.parquet(s"${path("episodes")}/$v/m1_episodes")
-      case None    => spark.read.parquet(path("m1_episodes"))
-    }
+  /** The newest committed episodes (throws before the first
+    * [[buildEpisodes]]). */
+  def episodes: DataFrame = spark.read.parquet(
+    TableOps.committedArtifactPath(spark, path("episodes"), "ep", "buildEpisodes()") +
+      "/m1_episodes")
 
   /** K5 graph semantic query: cosine top-k over the persisted vertex
     * embeddings (reference graphml_store.py:611-704). */

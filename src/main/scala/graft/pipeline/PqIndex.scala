@@ -332,7 +332,7 @@ object PqIndex {
   /** Reopen a saved index — codebook to the driver, codes a lazy scan
     * pinned to the version committed at open time. */
   def load(spark: SparkSession, basePath: String): PqIndex =
-    loadDir(spark, VectorIndex.resolvedDir(spark, basePath, "pq"))
+    loadDir(spark, VectorIndex.committedDir(spark, basePath, "pq"))
 
   /** [[load]] from a resolved version dir. */
   private[pipeline] def loadDir(spark: SparkSession, vp: String): PqIndex = {
@@ -365,7 +365,7 @@ class PqIndex private[pipeline] (
     val codesArr: DataFrame,
     val m: Int,
     val dim: Int,
-    val fitRows: Long = -1L,
+    val fitRows: Long,
     private val srcDir: Option[String] = None) extends VectorIndex {
 
   def kind: String = "pq"
@@ -431,7 +431,7 @@ class PqIndex private[pipeline] (
     PqIndex.encodeArrays(newVecs, codebook.toSeq, m, dim)
       .withColumn("fit", lit(false))
       .write.mode(SaveMode.Append).parquet(s"$vp/pq_codes")
-    VectorIndex.drift(newVecs, s"$vp/pq_codes", fitRows)
+    VectorIndex.drift(newVecs.sparkSession, s"$vp/pq_codes", fitRows)
   }
 
   /** Persist codes + codebook + fit metadata into a fresh version dir,
@@ -445,8 +445,7 @@ class PqIndex private[pipeline] (
     codebook.toSeq.map { case (s, c, v) => (s, c, v.toSeq) }
       .toDF("sub", "code", "centroid")
       .write.mode(SaveMode.Overwrite).parquet(s"$vp/pq_codebook")
-    val n = if (fitRows >= 0) fitRows else codesArr.count()
-    Seq((n, m, dim)).toDF("n_fit_rows", "m", "dim")
+    Seq((fitRows, m, dim)).toDF("n_fit_rows", "m", "dim")
       .write.mode(SaveMode.Overwrite).parquet(s"$vp/pq_meta")
     TableOps.commitArtifactDir(spark, basePath, kind, name)
   }

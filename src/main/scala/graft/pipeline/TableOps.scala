@@ -36,9 +36,11 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *    a cross-process affair only.
   *  - Readers resolve the manifest ONCE per DataFrame: a reader racing
   *    a rewrite keeps its snapshot's segments (still on disk until
-  *    [[vacuum]]) — it never sees a half-swapped bucket, the failure
-  *    mode of round-1..3's rename-swap. MVCC-on-read, like the
-  *    streaming side's `_streaming_commits` markers.
+  *    [[vacuum]]) — it never sees a half-swapped bucket. MVCC-on-read,
+  *    like the streaming side's `_streaming_commits` markers.
+  *  - A table's one on-disk form is its committed manifest. Reading a
+  *    path without one throws; so does a first commit or a rewrite over
+  *    parquet that no manifest names, which is left as found.
   *
   * Mutations stay PARTITION-SCOPED: a one-user delete or a backfill
   * replaces only the affected bucket's manifest entries; 15/16 of the
@@ -59,9 +61,12 @@ object TableOps {
   /** Bucket id of one user: [[userBucket]]'s pmod(xxhash64(·), 16) over
     * a literal, evaluated on the driver — no job, nothing memoized.
     * TableOpsSpec pins it to the `user_bucket` the write path stores. */
-  def bucketOf(spark: SparkSession, userId: String): Long =
-    Pmod(new XxHash64(Seq(Literal(userId))), Literal(BucketCount.toLong))
-      .eval().asInstanceOf[Long]
+  def bucketOf(spark: SparkSession, userId: String): Long = hashBucket(userId, BucketCount)
+
+  /** `pmod(xxhash64(value), n)` evaluated on the driver: the bucket the
+    * column form of the same expression assigns `value` at write time. */
+  private[pipeline] def hashBucket(value: String, n: Int): Long =
+    Pmod(new XxHash64(Seq(Literal(value))), Literal(n.toLong)).eval().asInstanceOf[Long]
 
   // ---------- manifest log ----------
 
@@ -127,7 +132,7 @@ object TableOps {
     } catch { case _: java.io.IOException => None }
   }
 
-  /** The latest committed snapshot, or None for a legacy / absent table.
+  /** The latest committed snapshot, or None when the path has none.
     * Marker-less manifests (an in-flight claim or a crashed writer's
     * partial) are skipped in favor of the newest sealed one. */
   private[pipeline] def currentSnapshot(
@@ -187,33 +192,35 @@ object TableOps {
         .map(_.getPath.getName).sorted.toSeq
         .filter(_.startsWith("user_bucket="))
         .map(b => s"$seg/$b")
-    else if (fs.listStatus(segPath).exists(st =>
-        st.isFile && st.getPath.getName.startsWith("part-") && st.getLen > 0))
-      Seq(seg)
+    else if (hasParts(fs, segPath)) Seq(seg)
     else Seq.empty
   }
 
-  /** Pre-manifest data at the table root, as manifest entries: bare
-    * `user_bucket=N` partition dirs (bucketed) or root `part-*` files
-    * (unpartitioned). The FIRST manifest over a legacy table must fold
-    * these in — a manifest naming only the new segment would silently
-    * hide every pre-upgrade row from reads. */
-  private def legacyEntries(fs: FileSystem, tablePath: String,
-      bucketed: Boolean): Seq[String] = {
-    val base = new Path(tablePath)
-    if (!fs.exists(base)) return Seq.empty
-    val st = fs.listStatus(base)
-    if (bucketed)
-      st.filter(_.isDirectory).map(_.getPath.getName)
-        .filter(_.startsWith("user_bucket=")).sorted.toSeq
-    else
-      st.filter(s => s.isFile && s.getPath.getName.startsWith("part-") && s.getLen > 0)
-        .map(_.getPath.getName).sorted.toSeq
+  private def hasParts(fs: FileSystem, dir: Path): Boolean =
+    fs.listStatus(dir).exists(st =>
+      st.isFile && st.getPath.getName.startsWith("part-") && st.getLen > 0)
+
+  /** Called where a path has no committed manifest: refuse to commit
+    * over parquet that no manifest names (root `part-*` files or
+    * `user_bucket=*` dirs, written outside this protocol). A manifest
+    * naming only new segments would hide that data; one adopting it
+    * would take in unchecked files. Those files stay as found; the
+    * caller's own just-written segment, if any, is deleted. */
+  private def refuseUnmanifested(fs: FileSystem, tablePath: String,
+      ownSegment: Option[Path] = None): Unit = {
+    val root = new Path(tablePath)
+    val foreign = fs.exists(root) && fs.listStatus(root).exists { st =>
+      val n = st.getPath.getName
+      (st.isFile && n.startsWith("part-")) || (st.isDirectory && n.startsWith("user_bucket="))
+    }
+    if (foreign) {
+      ownSegment.foreach(fs.delete(_, true))
+      throw new IllegalStateException(
+        s"$tablePath holds pre-manifest parquet and no committed manifest: refusing to write over it")
+    }
   }
 
-  /** Bucket id an entry belongs to: `seg_x/user_bucket=N` (segment
-    * entries) or bare `user_bucket=N` (legacy dirs folded into a
-    * table's first manifest). */
+  /** Bucket id of a bucketed table's entry `seg_x/user_bucket=N`. */
   private def entryBucket(e: String): Option[Long] = {
     val leaf = e.split("/").last
     if (leaf.startsWith("user_bucket=")) Some(leaf.stripPrefix("user_bucket=").toLong)
@@ -236,29 +243,24 @@ object TableOps {
     * the driver before any job launches, so a tenant query reads 1/16 of
     * the segments (the partition-pruning analogue for manifest tables).
     * The `user_bucket` column is re-derived from `user_id` (bit-identical
-    * to the write-path expression). Tables without a manifest fall back
-    * to a plain directory read (legacy layout). */
+    * to the write-path expression). A path with no committed manifest
+    * throws `IllegalStateException`. */
   def read(spark: SparkSession, tablePath: String,
       buckets: Option[Seq[Long]] = None,
-      mergeSchema: Boolean = false): DataFrame =
-    currentSnapshot(spark, tablePath) match {
-      case None =>
-        val reader =
-          if (mergeSchema) spark.read.option("mergeSchema", "true") else spark.read
-        buckets.fold(reader.parquet(tablePath))(bs =>
-          reader.parquet(tablePath).filter(col("user_bucket").isin(bs: _*)))
-      case Some(snap) =>
-        val chosen = buckets match {
-          case Some(bs) =>
-            val wanted = bs.toSet
-            snap.entries.filter(e => entryBucket(e).exists(wanted))
-          case None => snap.entries
-        }
-        val base =
-          if (chosen.isEmpty) emptyOf(spark, snap.schemaJson)
-          else readDirs(spark, tablePath, chosen, mergeSchema)
-        if (snap.bucketed) withUserBucket(base) else base
+      mergeSchema: Boolean = false): DataFrame = {
+    val snap = currentSnapshot(spark, tablePath).getOrElse(
+      throw new IllegalStateException(s"no committed manifest at $tablePath"))
+    val chosen = buckets match {
+      case Some(bs) =>
+        val wanted = bs.toSet
+        snap.entries.filter(e => entryBucket(e).exists(wanted))
+      case None => snap.entries
     }
+    val base =
+      if (chosen.isEmpty) emptyOf(spark, snap.schemaJson)
+      else readDirs(spark, tablePath, chosen, mergeSchema)
+    if (snap.bucketed) withUserBucket(base) else base
+  }
 
   def exists(spark: SparkSession, tablePath: String): Boolean = {
     val p = new Path(tablePath)
@@ -270,45 +272,33 @@ object TableOps {
     * entry list. Concurrent appends both survive — the commit loop
     * re-reads and re-applies on a lost race; the segment itself is never
     * rewritten. */
-  def appendBucketed(df: DataFrame, tablePath: String): Unit = {
-    val spark = df.sparkSession
-    val seg = newSegName()
-    val segPath = new Path(tablePath, seg)
-    val fs = fsOf(spark, segPath)
-    withUserBucket(df).write.mode(SaveMode.Overwrite)
-      .partitionBy("user_bucket").parquet(segPath.toString)
-    val newEntries = dataEntries(fs, tablePath, seg, bucketed = true)
-    commitAppend(spark, tablePath, bucketed = true, df.schema.json, newEntries)
-  }
+  def appendBucketed(df: DataFrame, tablePath: String): Unit =
+    appendSegment(df, tablePath, bucketed = true)
 
   /** Append rows to an unpartitioned (catalog) table. */
-  def append(df: DataFrame, tablePath: String): Unit = {
+  def append(df: DataFrame, tablePath: String): Unit =
+    appendSegment(df, tablePath, bucketed = false)
+
+  private def appendSegment(df: DataFrame, tablePath: String, bucketed: Boolean): Unit = {
     val spark = df.sparkSession
     val seg = newSegName()
     val segPath = new Path(tablePath, seg)
     val fs = fsOf(spark, segPath)
-    df.write.mode(SaveMode.Overwrite).parquet(segPath.toString)
-    commitAppend(spark, tablePath, bucketed = false, df.schema.json,
-      dataEntries(fs, tablePath, seg, bucketed = false))
-  }
-
-  private def commitAppend(spark: SparkSession, tablePath: String,
-      bucketed: Boolean, schemaJson: String, newEntries: Seq[String]): Unit =
+    val writer =
+      if (bucketed) withUserBucket(df).write.partitionBy("user_bucket") else df.write
+    writer.mode(SaveMode.Overwrite).parquet(segPath.toString)
+    val newEntries = dataEntries(fs, tablePath, seg, bucketed)
     lockFor(tablePath).synchronized {
       var done = false
       while (!done) {
         val snap = currentSnapshot(spark, tablePath)
-        // a table's FIRST manifest folds any legacy (pre-manifest) data
-        // in, so the upgrade-by-append never hides pre-upgrade rows
-        val existing = snap.fold(
-          legacyEntries(fsOf(spark, new Path(tablePath)), tablePath, bucketed))(
-          _.entries)
-        val entries = existing ++ newEntries
-        val version = snap.fold(0L)(_.version + 1)
+        if (snap.isEmpty) refuseUnmanifested(fs, tablePath, Some(segPath))
         // keep the newest schema line: appends may widen (e.g. batch_id)
-        done = tryCommit(spark, tablePath, version, bucketed, schemaJson, entries)
+        done = tryCommit(spark, tablePath, snap.fold(0L)(_.version + 1), bucketed,
+          df.schema.json, snap.fold(Seq.empty[String])(_.entries) ++ newEntries)
       }
     }
+  }
 
   /** Rewrite one `user_bucket=<bucket>` slice of `tablePath` through `f`.
     * The new bucket data lands in a fresh segment; the commit swaps the
@@ -326,7 +316,8 @@ object TableOps {
       while (!done) {
         currentSnapshot(spark, tablePath) match {
           case None =>
-            done = !sealLegacy(spark, tablePath, bucketed = true)
+            refuseUnmanifested(fsOf(spark, new Path(tablePath)), tablePath)
+            done = true // absent table: nothing to rewrite
           case Some(snap) =>
             val suffix = s"/user_bucket=$bucket"
             val mine = snap.entries.filter(e => entryBucket(e).contains(bucket))
@@ -339,10 +330,8 @@ object TableOps {
               val segPath = new Path(tablePath, s"$seg$suffix")
               val fs = fsOf(spark, segPath)
               next.write.mode(SaveMode.Overwrite).parquet(segPath.toString)
-              val hasData = fs.listStatus(segPath).exists(st =>
-                st.isFile && st.getPath.getName.startsWith("part-") && st.getLen > 0)
               val entries = snap.entries.filterNot(e => entryBucket(e).contains(bucket)) ++
-                (if (hasData) Seq(s"$seg$suffix".stripPrefix("/")) else Seq.empty)
+                (if (hasParts(fs, segPath)) Seq(s"$seg$suffix") else Seq.empty)
               preCommitHook()
               done = tryCommit(spark, tablePath, snap.version + 1,
                 bucketed = true, snap.schemaJson, entries)
@@ -362,7 +351,8 @@ object TableOps {
       while (!done) {
         currentSnapshot(spark, tablePath) match {
           case None =>
-            done = !sealLegacy(spark, tablePath, bucketed = false)
+            refuseUnmanifested(fsOf(spark, new Path(tablePath)), tablePath)
+            done = true // absent table: nothing to rewrite
           case Some(snap) =>
             val cur =
               if (snap.entries.isEmpty) emptyOf(spark, snap.schemaJson)
@@ -457,10 +447,8 @@ object TableOps {
     val upd = withUserBucket(updates)
     val touched = upd.select("user_bucket").distinct()
       .collect().map(_.getLong(0)).sorted
-    val existing: Set[Long] = currentSnapshot(spark, tablePath) match {
-      case Some(snap) => snap.entries.flatMap(entryBucket).toSet
-      case None => (0L until BucketCount) .toSet // legacy layout: assume all
-    }
+    val existing: Set[Long] = currentSnapshot(spark, tablePath)
+      .fold(Set.empty[Long])(_.entries.flatMap(entryBucket).toSet)
     touched.foreach { b =>
       val mine = upd.filter(col("user_bucket") === b).drop("user_bucket")
       if (existing.contains(b))
@@ -474,7 +462,7 @@ object TableOps {
   }
 
   /** Distinct segment dirs referenced by the current snapshot (0 for a
-    * legacy/absent table) — the "needs compaction" signal. */
+    * path with no committed manifest) — the "needs compaction" signal. */
   def segmentCount(spark: SparkSession, tablePath: String): Int =
     currentSnapshot(spark, tablePath)
       .map(_.entries.map(_.split("/")(0)).distinct.size).getOrElse(0)
@@ -515,14 +503,9 @@ object TableOps {
       val live: Set[String] = committed.take(keepVersions).flatMap { v =>
         readManifest(fs, ld, v).get.entries.map(_.split("/")(0))
       }.toSet
-      val base = new Path(tablePath)
-      // reclaim superseded segment dirs AND legacy dirs/files a rewrite
-      // has replaced (bare user_bucket=* dirs, root part-* files)
-      fs.listStatus(base).filter { st =>
-        val n = st.getPath.getName
-        (st.isDirectory && (n.startsWith("seg_") || n.startsWith("user_bucket="))) ||
-          (st.isFile && n.startsWith("part-"))
-      }.map(_.getPath)
+      fs.listStatus(new Path(tablePath))
+        .filter(st => st.isDirectory && st.getPath.getName.startsWith("seg_"))
+        .map(_.getPath)
         .filterNot(p => live.contains(p.getName))
         .foreach(p => fs.delete(p, true))
       committed.drop(keepVersions)
@@ -536,18 +519,27 @@ object TableOps {
   /** Side indexes (IVF, keyword postings) are rebuilt WHOLESALE, not
     * mutated — so instead of per-file manifests they get versioned
     * DIRECTORIES with a pointer log: a rebuild materializes
-    * `<prefix>_v<N+1>/` completely, then commits it with one rename-CAS
-    * pointer file. Readers resolve the newest committed pointer at
-    * handle-open time and keep their snapshot dir through any concurrent
-    * rebuild (the same MVCC-on-read as the table manifests; the old
-    * Overwrite-in-place rebuild could delete files under a racing
-    * query). [[vacuumArtifacts]] reclaims superseded versions. */
+    * `<prefix>_v<N+1>/` completely, then commits it with one
+    * exclusive-create pointer file. Readers resolve the newest committed
+    * pointer at handle-open time and keep their snapshot dir through any
+    * concurrent rebuild (the same MVCC-on-read as the table manifests).
+    * A family with no committed pointer has no on-disk form to read.
+    * [[vacuumArtifacts]] reclaims superseded versions. */
   private def ptrDir(base: String) = new Path(base, "_ptr")
   private def artifactRe(prefix: String) = (prefix + "_v(\\d{8})").r
 
   /** Newest committed version dir name for `prefix`, if any. */
   def currentArtifactDir(spark: SparkSession, base: String, prefix: String): Option[String] =
     currentArtifactDirs(spark, base, Seq(prefix)).get(prefix)
+
+  /** `base/<newest committed version dir of prefix>`. Throws
+    * `IllegalStateException` naming the base, the family and
+    * `buildCall` (what commits one) when there is none. */
+  private[pipeline] def committedArtifactPath(spark: SparkSession, base: String,
+      prefix: String, buildCall: String): String =
+    currentArtifactDir(spark, base, prefix).map(v => s"$base/$v").getOrElse(
+      throw new IllegalStateException(
+        s"no committed '$prefix' version under $base: run $buildCall first"))
 
   /** Newest committed version dir name per prefix that has one, from ONE
     * listing of the pointer dir. */
@@ -630,27 +622,6 @@ object TableOps {
       fs.delete(new Path(base, name), true)
       fs.delete(new Path(pd, name), false)
     }
-  }
-
-  // ---------- legacy (pre-manifest) layout upgrade ----------
-
-  /** Upgrade-on-first-write: seal a legacy (pre-manifest) directory's
-    * data into manifest v0, so the caller's retry loop proceeds down the
-    * MVCC rewrite path. This replaced the round-3 in-place legacy swap —
-    * which could still yank files from a racing reader; now even the
-    * FIRST mutation of a pre-manifest table is snapshot-isolated, and
-    * vacuum later reclaims the folded legacy dirs once rewrites
-    * supersede them. Returns true if there is legacy data to mutate
-    * (manifest now committed by us or a racing upgrader), false for an
-    * absent/empty table (the mutation is a no-op). */
-  private def sealLegacy(spark: SparkSession, tablePath: String,
-      bucketed: Boolean): Boolean = {
-    val fs = fsOf(spark, new Path(tablePath))
-    val legacy = legacyEntries(fs, tablePath, bucketed)
-    if (legacy.isEmpty) return false
-    val schema = readDirs(spark, tablePath, legacy, mergeSchema = true).schema.json
-    tryCommit(spark, tablePath, 0L, bucketed, schema, legacy)
-    true // a lost race means another upgrader committed v0 — just as good
   }
 
   /** Type-2 slowly-changing dimension from a change feed: rows

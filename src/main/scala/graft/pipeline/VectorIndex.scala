@@ -13,7 +13,7 @@ trait VectorIndex {
   def kind: String
   /** Indexed vectors (live + tombstoned), counted once per handle. */
   def nVectors: Long
-  /** Rows the quantizer was fit on (−1 when unrecorded). */
+  /** Rows the quantizer was fit on (every save records it). */
   def fitRows: Long
   /** One `vec_id` row per indexed vector. */
   def ids: DataFrame
@@ -70,18 +70,15 @@ object VectorIndex {
     }
   }
 
-  /** The committed version dir of `kind` (pre-versioning layouts fall
-    * back to the flat base path). */
-  private[pipeline] def resolvedDir(spark: SparkSession, base: String, kind: String): String =
-    TableOps.currentArtifactDir(spark, base, kind)
-      .map(v => s"$base/$v").getOrElse(base)
+  /** The committed version dir of `kind` under `base`; throws naming
+    * both when there is none. */
+  private[pipeline] def committedDir(spark: SparkSession, base: String, kind: String): String =
+    TableOps.committedArtifactPath(spark, base, kind, "buildIndexes()")
 
-  /** Post-append drift ratio of `table`: (total − fit-time rows) / total;
-    * without fit metadata (`fitRows < 0`) the appended rows are unfit. */
-  private[pipeline] def drift(newVecs: DataFrame, table: String, fitRows: Long): Double = {
-    val total = newVecs.sparkSession.read.parquet(table).count().toDouble
-    val unfit = if (fitRows >= 0) total - fitRows else newVecs.count().toDouble
-    if (total == 0) 0.0 else math.max(0.0, unfit) / total
+  /** Post-append drift ratio of `table`: (total − fit-time rows) / total. */
+  private[pipeline] def drift(spark: SparkSession, table: String, fitRows: Long): Double = {
+    val total = spark.read.parquet(table).count().toDouble
+    if (total == 0) 0.0 else math.max(0.0, total - fitRows) / total
   }
 
   /** The PQ-family tombstone rebuild. It exists to DROP dead rows, not
@@ -105,27 +102,22 @@ object VectorIndex {
       encode: DataFrame => DataFrame,
       rebuilt: (DataFrame, Long) => VectorIndex): VectorIndex = {
     val unfit =
-      if (h.fitRows < 0 || h.nVectors <= 0) 1.0
+      if (h.nVectors <= 0) 1.0
       else math.max(0.0, (h.nVectors - h.fitRows).toDouble) / h.nVectors.toDouble
     if (unfit > RefitDrift) return h.refit(liveVecs)
     val alive = codesArr.join(liveVecs.select("vec_id"), Seq("vec_id"), "left_semi")
     // duplicate rows are bit-identical codes; a chunk is "fit" if ANY of
     // its rows is (it was in the training set), so the dedup takes
     // max(fit) instead of an arbitrary survivor — deterministic fitRows
-    val keep =
-      if (codesArr.columns.contains("fit")) {
-        val rest = codesArr.columns.filter(c => c != "vec_id" && c != "fit")
-        alive.groupBy("vec_id").agg(max(col("fit")).as("fit"),
-          rest.map(c => first(col(c)).as(c)): _*)
-      } else alive.dropDuplicates("vec_id")
+    val rest = codesArr.columns.filter(c => c != "vec_id" && c != "fit")
+    val keep = alive.groupBy("vec_id").agg(max(col("fit")).as("fit"),
+      rest.map(c => first(col(c)).as(c)): _*)
     val missing = liveVecs.join(codesArr.select("vec_id"), Seq("vec_id"), "left_anti")
     val merged = keep.unionByName(
         encode(missing).withColumn("fit", lit(false)),
         allowMissingColumns = true)
       .localCheckpoint() // fit-count + save must read ONE materialization
-    // exact surviving-fit count via the flag; a legacy table without it
-    // yields nulls → counted unfit → drift over-estimates, which errs
-    // toward retraining, never toward stale recall
-    rebuilt(merged, merged.filter(coalesce(col("fit"), lit(false))).count())
+    // exact surviving-fit count via the flag every code row carries
+    rebuilt(merged, merged.filter(col("fit")).count())
   }
 }

@@ -20,6 +20,23 @@ class IndexSpec extends SparkSpec {
     assert(fromIndex == onTheFly)
   }
 
+  test("termBucketOf equals the term_bucket dir the postings are written under") {
+    // `tokens` splits on single spaces, so a one-term text indexes
+    // exactly that term ("" included); punctuation and non-ASCII survive
+    val terms = (0 until 188).map(i => s"term$i") ++ Seq("", "|", "a|b", "don't",
+      "C++", "e.g.", "ü", "naïve", "日本語", "emoji\uD83D\uDE42", "tab\tx", "x" * 300)
+    val dir = graft.TempDirs.create("kwbucket").toString
+    new KeywordIndex(spark, dir).build(
+      terms.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text"))
+    val ver = graft.pipeline.TableOps.currentArtifactDir(spark, dir, "kw").get
+    val written = spark.read.parquet(s"$dir/$ver/postings").select(col("term"),
+        regexp_extract(input_file_name(), "term_bucket=(\\d+)", 1).cast("long"))
+      .as[(String, Long)].collect()
+    assert(written.map(_._1).sorted.toSeq == terms.sorted)
+    val wrong = written.filter { case (t, b) => KeywordIndex.termBucketOf(t) != b }
+    assert(wrong.isEmpty, wrong.take(5).mkString(", "))
+  }
+
   private def ts(i: Int) =
     new java.sql.Timestamp(java.sql.Timestamp.valueOf("2024-06-01 00:00:00").getTime + i * 1000L)
 

@@ -1,14 +1,15 @@
 package graft
 
-import graft.pipeline.TableOps
+import graft.pipeline.{IvfIndex, IvfPq, KeywordIndex, MemFuse, PqIndex, TableOps}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** The versioned-manifest commit protocol: snapshot-isolated readers,
   * optimistic writers that retry instead of losing a mutation — the
   * correctness-under-concurrency properties the reference inherits from
-  * Postgres MVCC (database/postgres.py:167-253) and round ≤3's
-  * rename-swap did not have. */
+  * Postgres MVCC (database/postgres.py:167-253). Data outside a
+  * committed manifest or version dir is refused, never adopted. */
 class TableOpsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -96,6 +97,10 @@ class TableOpsSpec extends SparkSpec {
     assert(written.map(_._2).distinct.length == TableOps.BucketCount)
     val wrong = written.filter { case (u, b) => TableOps.bucketOf(spark, u) != b }
     assert(wrong.isEmpty, wrong.take(5).mkString(", "))
+    // a bucket-pruned read returns exactly that bucket's rows
+    val b0 = TableOps.bucketOf(spark, "")
+    assert(TableOps.read(spark, dir, buckets = Some(Seq(b0))).select("user_id").as[String]
+      .collect().sorted.toSeq == ids.filter(TableOps.bucketOf(spark, _) == b0).sorted)
   }
 
   test("concurrent appends from racing threads all land") {
@@ -150,63 +155,80 @@ class TableOpsSpec extends SparkSpec {
       .collect().sorted.toSeq == (1 to 4).map(i => s"m$i"))
   }
 
-  test("append to a legacy (pre-manifest) table folds existing data into the first manifest") {
-    // unpartitioned legacy layout: plain part files at the table root
-    val dir = tmp("legacyt")
-    Seq((1L, "old1"), (2L, "old2")).toDF("id", "v")
-      .write.parquet(dir)
-    TableOps.append(Seq((3L, "new")).toDF("id", "v"), dir)
-    assert(TableOps.read(spark, dir).select("id").as[Long].collect().sorted.toSeq
-      == Seq(1L, 2L, 3L),
-      "pre-upgrade rows must survive the first manifest commit")
-
-    // bucketed legacy layout: bare user_bucket=N partition dirs
-    val bdir = tmp("legacyb")
-    val t = java.sql.Timestamp.valueOf("2024-06-01 00:00:00")
-    TableOps.withUserBucket(
-      Seq(("m1", "u1", t), ("m2", "u2", t)).toDF("message_id", "user_id", "created_at"))
-      .write.partitionBy("user_bucket").parquet(bdir)
-    TableOps.appendBucketed(
-      Seq(("m3", "u1", t)).toDF("message_id", "user_id", "created_at"), bdir)
-    assert(TableOps.read(spark, bdir).select("message_id").as[String]
-      .collect().sorted.toSeq == Seq("m1", "m2", "m3"))
-    // bucket pruning still reaches the folded legacy dirs
-    val b1 = TableOps.bucketOf(spark, "u1")
-    assert(TableOps.read(spark, bdir, buckets = Some(Seq(b1)))
-      .filter(col("user_id") === "u1").count() == 2)
-    // a bucket rewrite targets the folded legacy entry, and vacuum then
-    // reclaims the replaced legacy dir
-    TableOps.rewriteBucket(spark, bdir, b1)(_.filter(col("message_id") =!= "m1"))
-    assert(TableOps.read(spark, bdir).select("message_id").as[String]
-      .collect().sorted.toSeq == Seq("m2", "m3"))
-    TableOps.vacuum(spark, bdir, keepVersions = 1)
-    assert(TableOps.read(spark, bdir).select("message_id").as[String]
-      .collect().sorted.toSeq == Seq("m2", "m3"), "reads intact after legacy GC")
+  /** Every file under `dir` with its bytes: what "left as found" compares. */
+  private def filesUnder(dir: String): Map[String, Seq[Byte]] = {
+    val root = java.nio.file.Paths.get(dir)
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.filter(Files.isRegularFile(_))
+      .map(f => root.relativize(f).toString -> Files.readAllBytes(f).toSeq).toMap
+    finally walk.close()
   }
 
-  test("first MUTATION of a legacy table seals it into a manifest (no in-place swap)") {
-    // rewrite-before-any-append: the legacy dir is sealed as v0 and the
-    // mutation runs down the MVCC path — a reader holding the pre-seal
-    // frame keeps answering (the old in-place swap deleted its files)
-    val dir = tmp("legacymut")
-    Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v").write.parquet(dir)
-    val preSeal = spark.read.parquet(dir)
-    TableOps.rewriteTable(spark, dir)(_.filter(col("id") =!= 2L))
-    assert(preSeal.count() == 3, "pre-upgrade reader keeps its snapshot")
-    assert(TableOps.read(spark, dir).select("id").as[Long].collect().sorted.toSeq
-      == Seq(1L, 3L))
-    assert(new java.io.File(s"$dir/_log").exists(), "manifest log created by the upgrade")
-
-    // bucketed twin through the facade-shaped layout
-    val bdir = tmp("legacymutb")
+  test("pre-manifest tables are refused by read, append and rewrite, and left as found") {
     val t = java.sql.Timestamp.valueOf("2024-06-01 00:00:00")
-    TableOps.withUserBucket(
-      Seq(("m1", "u1", t), ("m2", "u1", t)).toDF("message_id", "user_id", "created_at"))
+    def msgs(rows: (String, String)*) =
+      rows.map { case (m, u) => (m, u, t) }.toDF("message_id", "user_id", "created_at")
+    // unpartitioned: plain part files at the table root
+    val dir = tmp("premanifest")
+    Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.parquet(dir)
+    // bucketed: bare user_bucket=N partition dirs at the table root
+    val bdir = tmp("premanifestb")
+    TableOps.withUserBucket(msgs("m1" -> "u1", "m2" -> "u2"))
       .write.partitionBy("user_bucket").parquet(bdir)
-    TableOps.rewriteBucket(spark, bdir, TableOps.bucketOf(spark, "u1"))(
-      _.filter(col("message_id") =!= "m1"))
-    assert(TableOps.read(spark, bdir).select("message_id").as[String]
-      .collect().toSeq == Seq("m2"))
+    val before = Map(dir -> filesUnder(dir), bdir -> filesUnder(bdir))
+    val b1 = TableOps.bucketOf(spark, "u1")
+    val calls: Seq[(String, String, () => Any)] = Seq(
+      ("read", dir, () => TableOps.read(spark, dir)),
+      ("append", dir, () => TableOps.append(Seq((3L, "c")).toDF("id", "v"), dir)),
+      ("rewriteTable", dir, () => TableOps.rewriteTable(spark, dir)(identity)),
+      ("read bucketed", bdir, () => TableOps.read(spark, bdir, buckets = Some(Seq(b1)))),
+      ("appendBucketed", bdir, () => TableOps.appendBucketed(msgs("m3" -> "u1"), bdir)),
+      ("rewriteBucket", bdir, () => TableOps.rewriteBucket(spark, bdir, b1)(identity)),
+      ("mergeBucketed", bdir, () => TableOps.mergeBucketed(msgs("m1" -> "u1"), bdir, "message_id")))
+    calls.foreach { case (name, path, call) =>
+      val e = intercept[IllegalStateException](call())
+      assert(e.getMessage.contains(path), s"$name: ${e.getMessage}")
+      assert(filesUnder(path) == before(path), s"$name changed the files under $path")
+    }
+    // compaction and GC neither seal nor reclaim them
+    Seq(dir, bdir).foreach { path =>
+      TableOps.compact(spark, path)
+      TableOps.vacuum(spark, path, keepVersions = 1)
+      assert(filesUnder(path) == before(path), s"compact/vacuum changed $path")
+      assert(TableOps.segmentCount(spark, path) == 0)
+    }
+    // an absent path: read throws naming it, a rewrite is a no-op, an
+    // append creates v0
+    val absent = tmp("absent")
+    assert(intercept[IllegalStateException](TableOps.read(spark, absent))
+      .getMessage.contains(absent))
+    TableOps.rewriteTable(spark, absent)(identity)
+    assert(!TableOps.exists(spark, absent))
+    TableOps.append(Seq((1L, "a")).toDF("id", "v"), absent)
+    assert(TableOps.versions(spark, absent) == Seq(0L))
+  }
+
+  test("index families and derived layers with no committed version throw, naming what is missing") {
+    val dir = graft.TempDirs.create("nover").toString
+    val base = s"$dir/index"
+    new java.io.File(base).mkdirs()
+    val families: Seq[(String, () => Any)] = Seq(
+      "ivf" -> (() => IvfIndex.load(spark, base)),
+      "pq" -> (() => PqIndex.load(spark, base)),
+      "ivfpq" -> (() => IvfPq.load(spark, base)),
+      "kw" -> (() => new KeywordIndex(spark, base).bm25(Seq("spark"), 5)))
+    families.foreach { case (family, call) =>
+      val msg = intercept[IllegalStateException](call()).getMessage
+      assert(msg.contains(base) && msg.contains(s"'$family'"), msg)
+    }
+    val engine = new MemFuse(spark, dir)
+    val layers: Seq[(String, () => Any)] = Seq(
+      "buildSemanticLayer()" -> (() => engine.m2Facts),
+      "buildEpisodes()" -> (() => engine.episodes))
+    layers.foreach { case (build, call) =>
+      val msg = intercept[IllegalStateException](call()).getMessage
+      assert(msg.contains(build), msg)
+    }
   }
 
   test("readers skip an unsealed manifest; writers reclaim a crashed writer's stale claim") {
