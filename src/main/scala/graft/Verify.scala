@@ -19,6 +19,11 @@ object Verify {
       .withExtensions(new GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // the per-plan "No Partition Defined" warning would otherwise make up
+    // most of the log; logged at ERROR as in the test config
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec",
+      org.apache.logging.log4j.Level.ERROR)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.exists(name.contains)) }

@@ -208,13 +208,20 @@ case class Md5SignEncoder(dim: Int = Schemas.EmbeddingDim) extends TextEncoder {
   * by normalized token overlap — deterministic, same plumbing. */
 trait Reranker extends Serializable {
   def rerank(candidates: DataFrame, queryText: String, topK: Int): DataFrame
+
+  /** The `rerank_score` [[rerank]] gives a candidate's content, computed
+    * on the driver and bit-identical to it — or None, and the facade
+    * answers `queryText` on its Spark path. */
+  def localScorer(queryText: String): Option[String => Double] = None
 }
 
 case class OverlapReranker() extends Reranker {
+  private def queryTokens(queryText: String) = queryText.split(" ").filter(_.nonEmpty).distinct
+
   /** candidates: must carry (id, content); returns (id, content,
     * rerank_score) top-k sorted desc with id tie-break. */
   def rerank(candidates: DataFrame, queryText: String, topK: Int): DataFrame = {
-    val qTokens = queryText.split(" ").filter(_.nonEmpty).distinct
+    val qTokens = queryTokens(queryText)
     candidates
       .withColumn("rerank_score",
         graft.functions.TextFunctions.trunc6(
@@ -222,6 +229,14 @@ case class OverlapReranker() extends Reranker {
             lit(qTokens))).cast("double") / lit(qTokens.length.toDouble)))
       .orderBy(col("rerank_score").desc, col("id"))
       .limit(topK)
+  }
+
+  /** None for a query with no tokens: its score divides by zero. */
+  override def localScorer(queryText: String): Option[String => Double] = {
+    val qTokens = queryTokens(queryText)
+    val q = qTokens.toSet
+    Option.when(qTokens.nonEmpty)(content => DriverQuery.trunc6(
+      DriverQuery.tokens(content).distinct.count(q).toDouble / qTokens.length.toDouble))
   }
 }
 
@@ -321,14 +336,17 @@ case class ProjectionCrossEncoder(
     val enc = org.apache.spark.sql.Encoders.row(outSchema)
     val contentIdx = candidates.schema.fieldIndex("content")
     candidates.mapPartitions { rows =>
-      rows.map { r =>
-        val s = self.score(queryText, r.getString(contentIdx))
-        Row.fromSeq(r.toSeq :+ math.floor(s * 1e6) / 1e6)
-      }
+      rows.map(r => Row.fromSeq(r.toSeq :+ self.truncScore(queryText, r.getString(contentIdx))))
     }(enc)
       .orderBy(col("rerank_score").desc, col("id"))
       .limit(topK)
   }
+
+  private def truncScore(query: String, candidate: String): Double =
+    math.floor(score(query, candidate) * 1e6) / 1e6
+
+  override def localScorer(queryText: String): Option[String => Double] =
+    Some(truncScore(queryText, _))
 }
 
 object ProjectionCrossEncoder {

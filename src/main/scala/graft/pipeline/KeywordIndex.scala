@@ -13,8 +13,9 @@ import org.apache.spark.sql.functions._
   * prune to a handful of partitions), plus `doclen(doc_id, dl)` and a
   * single-row `stats(n_docs, avgdl)`.
   * Query time never touches the raw corpus: score = join of the query's
-  * posting slices with broadcast df/stats — at 100 TB this is the
-  * difference between a corpus scan per query and an index lookup.
+  * posting slices with broadcast df, the stats bound as literals — at
+  * 100 TB this is the difference between a corpus scan per query and an
+  * index lookup.
   */
 class KeywordIndex(spark: SparkSession, basePath: String) {
   import KeywordIndex.termBucket
@@ -99,7 +100,15 @@ class KeywordIndex(spark: SparkSession, basePath: String) {
     * MemFuse.indexStaleFraction; shrinks only on rebuild). Cached per
     * handle like the file listings: scoped queries consult it per query
     * and must not pay a stats job each time. */
-  @transient lazy val nDocs: Long = statsDf.head().getAs[Long]("n_docs")
+  @transient lazy val nDocs: Long = stats._1
+
+  // the one stats row (n_docs, avgdl), fetched once per handle; bm25
+  // binds both as literals instead of cross-joining the stats frame
+  // (a broadcast subplan job per query). avgdl is null on an empty corpus
+  @transient private lazy val stats: (Long, Column) = {
+    val r = statsDf.select(col("n_docs"), col("avgdl")).head()
+    (r.getLong(0), if (r.isNullAt(1)) lit(null).cast("double") else lit(r.getDouble(1)))
+  }
 
   /** Ids of the documents currently in the index (one row per doc) —
     * the anti-join side of idempotent incremental absorption
@@ -123,12 +132,11 @@ class KeywordIndex(spark: SparkSession, basePath: String) {
       .join(broadcast(dfreq), "term")
       .hint("shuffle_hash")
       .join(doclenDf, "doc_id")
-      .crossJoin(broadcast(statsDf))
       .withColumn("idf",
-        log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1.0))
+        log((lit(nDocs) - col("df") + 0.5) / (col("df") + 0.5) + 1.0))
       .withColumn("tscore",
         col("idf") * (col("tf") * lit(k1 + 1)) /
-          (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / col("avgdl"))))
+          (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / stats._2)))
       .groupBy("doc_id")
       .agg(trunc6(dsum12(col("tscore"))).as("score"))
     scored.select(col("doc_id").as("id"), col("score"))

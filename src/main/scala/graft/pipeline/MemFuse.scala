@@ -261,8 +261,21 @@ class MemFuse(
   /** Hybrid top-k retrieval, the flagship path: vector + keyword scans
     * over the user's chunks, RRF-fused at 2×topK (first_stage_top_k,
     * reference memory_service.py:1553-1555), hydrated, cross-encoder
-    * reranked to topK. One DataFrame DAG — the scans parallelize and the
-    * tenant filter prunes partitions.
+    * reranked to topK.
+    *
+    * Two executions, one answer. A tenant of at most [[MemFuse.SnapshotCap]]
+    * m1 rows is answered on the DRIVER: its rows are collected once into
+    * a snapshot (one job, then held until the next facade write,
+    * [[clearCache]] or [[refresh]]) and every score, the fusion, the
+    * hydration and the rerank run there ([[DriverQuery]]'s twins, row-
+    * for-row identical to the Spark path). The result is a local
+    * DataFrame: the work runs when `query` is called, and its `collect()`
+    * runs no job. Everything else takes the Spark path, one DataFrame
+    * DAG whose scans parallelize and whose tenant filter prunes
+    * partitions: a tenant over the cap, `includeGraph`,
+    * `includeKnowledge`, `agentId`, a `fusion` other than `rrf`,
+    * `freshness`, or a reranker with no driver scorer
+    * ([[Reranker.localScorer]]).
     *
     * With `useIndexes = true` (after [[buildIndexes]]) the two scans
     * become INDEX LOOKUPS instead of corpus scans — the IVF probe reads
@@ -313,6 +326,14 @@ class MemFuse(
       agentId: Option[String] = None,
       fusion: String = "rrf",
       freshness: Option[Double] = None): DataFrame = {
+    val onDriver = reranker.localScorer(text)
+      .filter(_ => !includeGraph && !includeKnowledge && agentId.isEmpty &&
+        fusion == "rrf" && freshness.isEmpty)
+      .flatMap(score => tenantSnapshot(userId).map(snap => queryOnDriver(snap, score,
+        text, topK, rrfK, weights, similarityThreshold, useIndexes, nProbe,
+        indexOversample, sessionId)))
+    if (onDriver.isDefined) return onDriver.get
+
     val firstStage = 2 * topK
     val tenantChunks = m1ForUser(userId).filter(col("user_id") === userId)
     val chunks = (sessionId, agentId) match {
@@ -360,20 +381,7 @@ class MemFuse(
     // total/scope doc counts, capped at the whole index — the scope
     // count is one job over the bucket-pruned chunks (catalog row stats
     // at warehouse scale).
-    lazy val idxFetch: Int = {
-      val base = indexOversample * firstStage
-      if (!scoped) base
-      else {
-        val scopeN = chunks.count()
-        if (scopeN == 0) base
-        else {
-          val totalN = nIndexed
-          val scale = math.max(1L, math.ceil(totalN.toDouble / scopeN).toLong)
-          math.min(math.min(base.toLong * scale, math.max(totalN, base.toLong)),
-            Int.MaxValue.toLong).toInt
-        }
-      }
-    }
+    lazy val idxFetch: Int = indexFetch(indexOversample * firstStage, scoped, chunks.count())
 
     val vector =
       (if (useIndexes) {
@@ -447,6 +455,81 @@ class MemFuse(
     }
     reranker.rerank(boosted.drop("created_at"), text, topK)
   }
+
+  private def indexFetch(base: Int, scoped: Boolean, scopeN: => Long): Int =
+    if (!scoped) base
+    else {
+      val n = scopeN
+      if (n == 0) base
+      else {
+        val totalN = nIndexed
+        val scale = math.max(1L, math.ceil(totalN.toDouble / n).toLong)
+        math.min(math.min(base.toLong * scale, math.max(totalN, base.toLong)),
+          Int.MaxValue.toLong).toInt
+      }
+    }
+
+  /** [[query]] below the cap, over the tenant's snapshot. The index legs
+    * still run in Spark, one collected call each; their semi-join to the
+    * scope and everything after run here. */
+  private def queryOnDriver(snap: DriverQuery.Snapshot, score: String => Double,
+      text: String, topK: Int, rrfK: Double, weights: Map[String, Double],
+      similarityThreshold: Double, useIndexes: Boolean, nProbe: Int,
+      indexOversample: Int, sessionId: Option[String]): DataFrame = {
+    import DriverQuery.{Hit, topHits}
+    val firstStage = 2 * topK
+    val scope = sessionId.fold(snap.docs)(sid => snap.docs.filter(_.sessionId == sid))
+    val terms = text.split(" ").filter(_.nonEmpty).toSeq
+    val q = encoder.encodeOne(text)
+    val (vecHits, kwHits) =
+      if (!useIndexes)
+        (DriverQuery.cosineHits(scope, q), DriverQuery.bm25(scope, terms, firstStage))
+      else {
+        val (vec, kw) = (required(vecIndex), required(kwIndex))
+        val ids = scope.iterator.map(_.id).toSet
+        lazy val fetch =
+          indexFetch(indexOversample * firstStage, sessionId.isDefined, scope.size)
+        def inScope(legHits: => DataFrame): Seq[Hit] =
+          if (scope.isEmpty) Nil
+          else legHits.collect().toSeq.map(r => Hit(r.getString(0), r.getDouble(1)))
+            .filter(h => ids(h.id))
+        (inScope(vec.candidates(q, fetch, nProbe, m1Vectors)), inScope(kw.bm25(terms, fetch)))
+      }
+    val fused = DriverQuery.rrf(Seq(
+      "vector" -> topHits(DriverQuery.atLeast(vecHits, similarityThreshold), firstStage),
+      "keyword" -> topHits(kwHits, firstStage)), rrfK, weights, firstStage)
+    spark.createDataFrame(java.util.Arrays.asList(
+      DriverQuery.rerank(fused, scope, score, topK): _*), snap.resultSchema)
+  }
+
+  /** The tenant's m1 rows (`chunk_id, content, embedding, session_id,
+    * token_count`, from the bucket-pruned [[m1ForUser]] view), collected
+    * in one job that stops each partition at `cap + 1` rows; None over
+    * the cap. Held as long as that view: until [[clearCache]]. */
+  private def tenantSnapshot(userId: String): Option[DriverQuery.Snapshot] = {
+    val cap = snapshotCap
+    if (cap < 0) return None
+    snapshots.get(userId).getOrElse {
+      val gen = snapshots.generation
+      val cols = m1ForUser(userId).filter(col("user_id") === userId).select(
+        col("chunk_id"), col("content"), col("embedding"), col("session_id"),
+        col("token_count"))
+      val rows = cols.mapPartitions(_.take(cap + 1))(
+        org.apache.spark.sql.Encoders.row(cols.schema)).collect()
+      val docs = rows.flatMap(DriverQuery.Doc.of).toVector
+      val snap = Option.when(rows.length <= cap && docs.size == rows.length)(
+        DriverQuery.Snapshot.of(docs, cols.schema))
+      snapshots.put(userId, snap, gen)
+      snap
+    }
+  }
+
+  @transient private lazy val snapshots = new DriverQuery.SnapshotCache(MemFuse.SnapshotRowBudget)
+  private var capRows: Int = MemFuse.SnapshotCap
+  /** The snapshot row cap; negative sends every query to the Spark path.
+    * Setting it drops the held snapshots. */
+  private[graft] def snapshotCap: Int = capRows
+  private[graft] def snapshotCap_=(n: Int): Unit = { capRows = n; clearCache() }
 
   /** Build the persisted side indexes over the current m1 chunks: the
     * term-bucket-partitioned BM25 postings (KeywordIndex) and ONE vector
@@ -977,6 +1060,7 @@ class MemFuse(
   def clearCache(): Unit = {
     resultCache.synchronized(resultCache.clear())
     viewCache.clear()
+    snapshots.clear()
   }
 
   /** Buffer-first routing with quality gate: score the (cheap, recent)
@@ -1130,4 +1214,14 @@ class MemFuse(
       .select(col("chunk_id"), col("message_id"), col("role"),
         col("sequence_number"), col("content"))
   }
+}
+
+object MemFuse {
+  /** Largest tenant (m1 rows) [[MemFuse.query]] answers from a driver
+    * snapshot: at `Schemas.EmbeddingDim` 64 a capped snapshot holds 4 MB
+    * of embeddings plus its contents. */
+  val SnapshotCap = 16384
+
+  /** Rows all held snapshots may total (least recently used dropped first). */
+  val SnapshotRowBudget = 4 * SnapshotCap
 }

@@ -527,6 +527,14 @@ object TableOps {
     * [[vacuumArtifacts]] reclaims superseded versions. */
   private def ptrDir(base: String) = new Path(base, "_ptr")
   private def artifactRe(prefix: String) = (prefix + "_v(\\d{8})").r
+  // retirement record: the highest version [[dropArtifactPointers]] retired
+  private def retiredRe(prefix: String) = (prefix + "_retired_v(\\d{8})").r
+
+  /** Highest version of `prefix` ever retired, from one pointer listing. */
+  private def retiredMax(names: Seq[String], prefix: String): Option[Long] = {
+    val re = retiredRe(prefix)
+    names.collect { case re(n) => n.toLong }.maxOption
+  }
 
   /** Newest committed version dir name for `prefix`, if any. */
   def currentArtifactDir(spark: SparkSession, base: String, prefix: String): Option[String] =
@@ -570,9 +578,14 @@ object TableOps {
       if (!fs.exists(bp)) None
       else fs.listStatus(bp).map(_.getPath.getName)
         .collect { case re(n) => n.toLong }.maxOption
-    val ptrMax = currentArtifactDir(spark, base, prefix)
-      .map(_.stripPrefix(prefix + "_v").toLong)
-    val next = (dirMax ++ ptrMax).maxOption.map(_ + 1).getOrElse(0L)
+    val pd = ptrDir(base)
+    val ptrNames =
+      if (!fs.exists(pd)) Seq.empty[String]
+      else fs.listStatus(pd).map(_.getPath.getName).toSeq
+    val ptrMax = ptrNames.collect { case re(n) => n.toLong }.maxOption
+    // past retired versions too, whose dirs vacuum may already have reclaimed
+    val next = (dirMax ++ ptrMax ++ retiredMax(ptrNames, prefix))
+      .maxOption.map(_ + 1).getOrElse(0L)
     f"${prefix}_v$next%08d"
   }
 
@@ -594,33 +607,46 @@ object TableOps {
 
   /** Retire an artifact family: delete every pointer file for `prefix`
     * so `currentArtifactDir` resolves to None (new opens see no such
-    * artifact). Version DIRS are left on disk for readers pinned at
-    * open — they become orphans for a later manual cleanup, exactly
-    * like a version superseded by a rebuild. */
+    * artifact), and record the highest version retired. Version DIRS
+    * are left on disk for readers pinned at open; [[vacuumArtifacts]]
+    * reclaims those at or below the record. */
   def dropArtifactPointers(spark: SparkSession, base: String, prefix: String): Unit = {
     val pd = ptrDir(base)
     val fs = fsOf(spark, pd)
     if (!fs.exists(pd)) return
     val re = artifactRe(prefix)
-    fs.listStatus(pd).map(_.getPath)
-      .filter(p => re.findFirstIn(p.getName).contains(p.getName))
-      .foreach(fs.delete(_, false))
+    val retired = fs.listStatus(pd).map(_.getPath.getName)
+      .collect { case name @ re(n) => (name, n.toLong) }
+    if (retired.nonEmpty) {
+      exclusiveCreate(fs, new Path(pd, f"${prefix}_retired_v${retired.map(_._2).max}%08d"))
+        .foreach(_.close())
+      retired.foreach { case (name, _) => fs.delete(new Path(pd, name), false) }
+    }
   }
 
   /** Drop artifact versions older than the newest `keep` (and their
-    * pointer files). */
+    * pointer files), and every version dir at or below the family's
+    * retirement record. A build in flight is never touched: it has no
+    * pointer yet and [[nextArtifactDir]] numbered it past every retired
+    * version. */
   def vacuumArtifacts(spark: SparkSession, base: String, prefix: String,
       keep: Int = 2): Unit = {
     val pd = ptrDir(base)
     val fs = fsOf(spark, pd)
     if (!fs.exists(pd)) return
     val re = artifactRe(prefix)
-    val versions = fs.listStatus(pd).map(_.getPath.getName)
-      .collect { case re(n) => n.toLong }.sorted.reverse
+    val ptrNames = fs.listStatus(pd).map(_.getPath.getName).toSeq
+    val versions = ptrNames.collect { case re(n) => n.toLong }.sorted.reverse
     versions.drop(keep).foreach { v =>
       val name = f"${prefix}_v$v%08d"
       fs.delete(new Path(base, name), true)
       fs.delete(new Path(pd, name), false)
+    }
+    retiredMax(ptrNames, prefix).foreach { r =>
+      fs.listStatus(new Path(base)).map(_.getPath).filter(_.getName match {
+        case re(n) => n.toLong <= r
+        case _     => false
+      }).foreach(fs.delete(_, true))
     }
   }
 

@@ -70,6 +70,9 @@ class IndexSpec extends SparkSpec {
       Schemas.Message("m1", "s1", "u1", "r1", 1, "user", "spark shuffle partition tuning", ts(1)),
       Schemas.Message("m2", "s1", "u1", "r2", 2, "user", "broadcast join details", ts(2)),
       Schemas.Message("m3", "s2", "u1", "r3", 3, "user", "spark partition pruning", ts(3))).toDF())
+    // the plan under guard is the Spark path's; below the snapshot cap
+    // the facade answers on the driver, so this engine has no cap
+    engine.snapshotCap = -1
     val df = engine.query("spark partition", "u1", topK = 10)
     val exec = df.queryExecution.executedPlan match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
@@ -343,6 +346,81 @@ class IndexSpec extends SparkSpec {
         nProbe = 2).count() == 3, s"the kept $backend version still answers")
     }
     assert(versions("kw").size == 2)
+  }
+
+  test("maintain() reclaims the version dirs of retired vector families") {
+    val dir = graft.TempDirs.create("vacretired").toString
+    val engine = new MemFuse(spark, dir)
+    engine.ingest((1 to 6).map(i => Schemas.Message(s"m$i", s"s${i % 2}", "u1", s"r$i",
+      i, "user", s"spark partition note $i", ts(i))).toDF())
+    def versions(family: String) = new java.io.File(s"$dir/index").list()
+      .filter(_.matches(family + "_v\\d{8}")).sorted.toSeq
+    engine.buildIndexes(nlist = 2, vectorIndex = "pq")
+    engine.buildIndexes(nlist = 2, vectorIndex = "pq")
+    engine.buildIndexes(nlist = 2, vectorIndex = "ivf")
+    assert(versions("pq") == Seq("pq_v00000000", "pq_v00000001"))
+    engine.maintain(keepVersions = 1)
+    assert(versions("pq").isEmpty, "retired pq versions must be reclaimed")
+    assert(versions("ivf") == Seq("ivf_v00000000"))
+    assert(engine.query("spark partition", "u1", topK = 3, useIndexes = true,
+      nProbe = 2).count() == 3, "the live ivf version still answers")
+    // a later build of the family still numbers past what it retired
+    engine.buildIndexes(nlist = 2, vectorIndex = "pq")
+    assert(versions("pq") == Seq("pq_v00000002"))
+  }
+
+  test("an uncommitted index build dir survives maintain()") {
+    val dir = graft.TempDirs.create("vacinflight").toString
+    val engine = new MemFuse(spark, dir)
+    engine.ingest((1 to 6).map(i => Schemas.Message(s"m$i", s"s${i % 2}", "u1", s"r$i",
+      i, "user", s"spark partition note $i", ts(i))).toDF())
+    engine.buildIndexes(nlist = 2, vectorIndex = "pq")
+    engine.buildIndexes(nlist = 2, vectorIndex = "ivf") // retires pq_v00000000
+    // builds in flight: dirs named and written, no pointer committed yet
+    val inFlight = Seq("pq", "ivf").map { family =>
+      val name = graft.pipeline.TableOps.nextArtifactDir(spark, s"$dir/index", family)
+      val d = new java.io.File(s"$dir/index/$name")
+      d.mkdirs()
+      Files.writeString(d.toPath.resolve("part-0"), "partial")
+      d
+    }
+    assert(inFlight.map(_.getName) == Seq("pq_v00000001", "ivf_v00000001"))
+    engine.maintain(keepVersions = 1)
+    assert(!new java.io.File(s"$dir/index/pq_v00000000").exists(),
+      "the retired version is reclaimed")
+    inFlight.foreach(d => assert(new java.io.File(d, "part-0").exists(),
+      s"${d.getName} is a build in flight and must survive"))
+  }
+
+  test("keyword bm25 binds the corpus stats as literals, bit-identical to the stats join") {
+    val docs = Tables.documents(spark, sf())
+    val dir = graft.TempDirs.create("kwlit").toString
+    val idx = new KeywordIndex(spark, dir)
+    idx.build(docs.filter(col("doc_id") % 2 === 0))
+    idx.addDocuments(docs.filter(col("doc_id") % 2 === 1))
+    val ops = graft.pipeline.TableOps
+    val ver = s"$dir/${ops.currentArtifactDir(spark, dir, "kw").get}"
+    val statsUpd = ops.currentArtifactDir(spark, ver, "stats_upd")
+    assert(statsUpd.isDefined, "addDocuments commits the incremental stats")
+    // the previous form: the stats row cross-joined as a broadcast
+    val terms = Seq("join", "filter", "table", "scan", "query")
+    val postings = spark.read.parquet(s"$ver/postings").filter(col("term").isin(terms: _*))
+    val dfreq = postings.groupBy("term").agg(count(lit(1)).as("df"))
+    val (k1, b) = (1.2, 0.75)
+    val joined = postings.join(broadcast(dfreq), "term").hint("shuffle_hash")
+      .join(spark.read.parquet(s"$ver/doclen"), "doc_id")
+      .crossJoin(broadcast(spark.read.parquet(s"$ver/${statsUpd.get}")))
+      .withColumn("idf", log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1.0))
+      .withColumn("tscore", col("idf") * (col("tf") * lit(k1 + 1)) /
+        (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / col("avgdl"))))
+      .groupBy("doc_id")
+      .agg(graft.functions.TextFunctions.trunc6(
+        graft.functions.TextFunctions.dsum12(col("tscore"))).as("score"))
+      .select(col("doc_id").as("id"), col("score"))
+      .orderBy(col("score").desc, col("id")).limit(50)
+    val fresh = new KeywordIndex(spark, dir).bm25(terms, 50)
+    assert(!fresh.inputFiles.exists(_.contains("stats")), "no stats scan per query")
+    assert(fresh.as[(Long, Double)].collect().toSeq == joined.as[(Long, Double)].collect().toSeq)
   }
 
   test("pq stale rebuild re-encodes committed-but-unindexed live rows") {

@@ -373,4 +373,164 @@ class PipelineSpec extends SparkSpec {
     val top = engine.query("tune spark shuffle", "u1", topK = 1).collect()
     assert(top.nonEmpty && top.head.getAs[String]("content").contains("shuffle"))
   }
+
+  // ---------- driver-resident tenant snapshots ----------
+
+  private def onDriver(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.logical.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+
+  /** Words with non-ASCII and punctuation; texts with double and
+    * trailing spaces, and empty ones. */
+  private val vocab = Vector("spark", "shuffle", "partition", "join", "café", "日本語",
+    "straße", "x", "tuning", "recipe", "don't")
+  private def randomText(rnd: scala.util.Random, maxWords: Int): String = {
+    val words = Seq.fill(rnd.nextInt(maxWords + 1))(vocab(rnd.nextInt(vocab.size)))
+    words.mkString(if (rnd.nextInt(4) == 0) "  " else " ") +
+      (if (rnd.nextInt(5) == 0) " " else "")
+  }
+
+  test("driver twins equal their Spark twins: cosine, bm25, rrf, both rerankers") {
+    import graft.functions.{TextFunctions, VectorFunctions}
+    import graft.operators.{Fusion, Retrieval}
+    import DriverQuery.{Doc, Hit}
+    val rnd = new scala.util.Random(7)
+    val enc = HashingEncoder()
+    // contents repeat under distinct ids (tied scores), and ids repeat
+    // with their content (a re-ingested round)
+    val distinct = (0 until 45).map { i =>
+      val content = if (i % 7 == 0) "spark join" else randomText(rnd, 6)
+      Doc(s"c${i}é", content, enc.encodeOne(content), s"s${i % 3}",
+        DriverQuery.tokens(content).length)
+    }
+    val docs = distinct ++ Seq.fill(15)(distinct(rnd.nextInt(distinct.size)))
+    val docsDf = docs.map(d => (d.id, d.content, d.embedding.toSeq, d.sessionId,
+      d.tokenCount.asInstanceOf[Int])).toDF("id", "content", "embedding", "session_id", "token_count")
+    def hits(df: org.apache.spark.sql.DataFrame) =
+      df.collect().toSeq.map(r => Hit(r.getString(0), r.getDouble(1)))
+    for (round <- 0 until 4) {
+      val text = randomText(rnd, 4).trim match { case "" => "spark"; case t => t }
+      val terms = text.split(" ").filter(_.nonEmpty).toSeq
+      val q = enc.encodeOne(text)
+      val k = 2 + rnd.nextInt(10)
+      val vec = DriverQuery.topHits(DriverQuery.cosineHits(docs, q), docs.size)
+      assert(vec == hits(docsDf.select(col("id"), TextFunctions.trunc6(
+        VectorFunctions.cosine(col("embedding"), typedLit(q.toSeq))).as("score"))
+        .orderBy(col("score").desc, col("id"))), s"cosine, round $round")
+      val kw = DriverQuery.bm25(docs, terms, k)
+      assert(kw == hits(Retrieval.bm25(docsDf.select(col("id").as("doc_id"),
+        col("content").as("text")), terms, k)), s"bm25 '$text', round $round")
+      val (rrfK, weights) = (Seq(60.0, 1.0, 0.5)(round % 3), Map("vector" -> 1.0, "keyword" -> 0.5))
+      val top = vec.take(k)
+      val fused = DriverQuery.rrf(Seq("vector" -> top, "keyword" -> kw), rrfK, weights, k)
+      val united = (top.map(h => (h.id, h.score, "vector")) ++ kw.map(h => (h.id, h.score, "keyword")))
+        .toDF("id", "score", "store_type")
+      assert(fused == hits(Fusion.rrf(united, rrfK, weights, k)), s"rrf, round $round")
+      val candidates = fused.map(f => (f.id, f.score)).toDF("id", "fused_score")
+        .join(docsDf.drop("embedding"), "id")
+        .select("id", "content", "fused_score", "session_id", "token_count")
+      for (rr <- Seq(OverlapReranker(), ProjectionCrossEncoder.trained)) {
+        val local = DriverQuery.rerank(fused, docs, rr.localScorer(text).get, 5)
+        assert(local == rr.rerank(candidates, text, 5).collect().toSeq, s"$rr, round $round")
+      }
+    }
+    assert(OverlapReranker().localScorer("  ").isEmpty, "no driver score for a token-less query")
+  }
+
+  test("driver path ≡ Spark path on randomized warehouses: rows, order, schema") {
+    for ((backend, seed) <- Seq("ivf" -> 11, "pq" -> 12, "ivfpq" -> 13)) {
+      val rnd = new scala.util.Random(seed)
+      val (engine, dir) = freshEngine()
+      val sessions = Map("u1" -> Vector("s-ä", "s-日本", "s-plain"),
+        "u2" -> Vector("s-\uD83D\uDE42", "s-b"), "nobody" -> Vector("s-none"))
+      val msgs = (1 to 24).map { i =>
+        val u = if (rnd.nextInt(3) == 0) "u2" else "u1"
+        val s = sessions(u)(rnd.nextInt(sessions(u).size))
+        msg(s"m$i", s, u, s"r$i", i, "user", if (i % 6 == 0) "" else randomText(rnd, 5))
+      } ++ Seq( // the same text in two sessions: tied scores, distinct ids
+        msg("t1", "s-ä", "u1", "rt1", 30, "user", "spark join tuning"),
+        msg("t2", "s-plain", "u1", "rt2", 31, "user", "spark join tuning"))
+      engine.ingest(msgs.toDF())
+      engine.ingest(msgs.take(2).toDF()) // re-ingested rounds repeat their chunk ids
+      engine.buildIndexes(nlist = 2, vectorIndex = backend)
+      val reference = new MemFuse(spark, dir)
+      reference.snapshotCap = -1
+      val ce = new MemFuse(spark, dir, reranker = ProjectionCrossEncoder.trained)
+      val ceReference = new MemFuse(spark, dir, reranker = ProjectionCrossEncoder.trained)
+      ceReference.snapshotCap = -1
+      // each user meets both paths, scoped and not, with both rerankers
+      for (user <- Seq("u1", "u2", "nobody"); useIndexes <- Seq(false, true);
+           (scope, withCe) <- Seq(None -> useIndexes,
+             Some(sessions(user)(rnd.nextInt(sessions(user).size))) -> !useIndexes)) {
+        val text = randomText(rnd, 3).trim match { case "" => "spark join"; case t => t }
+        val topK = 1 + rnd.nextInt(5)
+        val threshold = Seq(0.0, 0.25, -1.0)(rnd.nextInt(3))
+        val rrfK = Seq(60.0, 1.0)(rnd.nextInt(2))
+        val nProbe = 1 + rnd.nextInt(2)
+        val (e, ref) = if (withCe) (ce, ceReference) else (engine, reference)
+        def run(m: MemFuse) = m.query(text, user, topK = topK, rrfK = rrfK,
+          similarityThreshold = threshold, useIndexes = useIndexes, nProbe = nProbe,
+          sessionId = scope)
+        val (local, viaSpark) = (run(e), run(ref))
+        val what = s"$backend '$text' $user $scope indexed=$useIndexes topK=$topK " +
+          s"threshold=$threshold rrfK=$rrfK nProbe=$nProbe ${if (e eq ce) "ce" else "overlap"}"
+        assert(onDriver(local) && !onDriver(viaSpark), what)
+        assert(local.schema == viaSpark.schema, what)
+        assert(local.collect().toSeq == viaSpark.collect().toSeq, what)
+      }
+    }
+  }
+
+  test("snapshot guard: exactly cap rows runs on the driver, cap + 1 on Spark, same rows") {
+    val (engine, dir) = freshEngine()
+    engine.ingest((1 to 5).map(i => msg(s"m$i", s"s${i % 2}", "u1", s"r$i", i, "user",
+      s"spark partition note $i")).toDF())
+    val reference = new MemFuse(spark, dir)
+    reference.snapshotCap = -1
+    for (useIndexes <- Seq(false, true)) {
+      if (useIndexes) engine.buildIndexes(nlist = 2)
+      def run(m: MemFuse) = m.query("spark note 3", "u1", topK = 3, useIndexes = useIndexes)
+      val expected = run(reference).collect().toSeq
+      assert(expected.nonEmpty)
+      engine.snapshotCap = 5 // u1 holds exactly 5 m1 rows
+      val atCap = run(engine)
+      assert(onDriver(atCap))
+      assert(atCap.collect().toSeq == expected)
+      engine.snapshotCap = 4
+      val overCap = run(engine)
+      assert(!onDriver(overCap))
+      assert(overCap.collect().toSeq == expected)
+    }
+  }
+
+  test("every other fallback condition takes the Spark path") {
+    val (engine, dir) = freshEngine()
+    engine.createUser("u1", "User One")
+    engine.createAgent("a1", "Agent")
+    engine.createSession("s1", "u1", "a1")
+    engine.ingest(Seq(
+      msg("m1", "s1", "u1", "r1", 1, "user", "spark shuffle partition tuning"),
+      msg("m2", "s1", "u1", "r2", 2, "user", "broadcast join details")).toDF())
+    engine.addKnowledge("u1", Seq("spark knowledge row"))
+    engine.buildSemanticLayer()
+    assert(onDriver(engine.query("spark join", "u1")))
+    assert(!onDriver(engine.query("spark join", "u1", includeGraph = true)))
+    assert(!onDriver(engine.query("spark join", "u1", includeKnowledge = true)))
+    assert(!onDriver(engine.query("spark join", "u1", agentId = Some("a1"))))
+    assert(!onDriver(engine.query("spark join", "u1", fusion = "weighted")))
+    assert(!onDriver(engine.query("spark join", "u1", freshness = Some(0.5))))
+    // the overlap score of a token-less query divides by zero
+    assert(!onDriver(engine.query(" ", "u1")))
+    val noScorer = new Reranker {
+      def rerank(c: org.apache.spark.sql.DataFrame, q: String, k: Int) =
+        OverlapReranker().rerank(c, q, k)
+    }
+    assert(!onDriver(new MemFuse(spark, dir, reranker = noScorer).query("spark join", "u1")))
+    // a row the driver scores cannot represent: m1 content written null
+    // by a writer other than the facade
+    TableOps.appendBucketed(engine.m1.filter(col("user_id") === "u1").limit(1)
+      .drop("user_bucket").withColumn("content", lit(null).cast("string")),
+      s"$dir/m1_episodic")
+    engine.refresh()
+    assert(!onDriver(engine.query("spark join", "u1")))
+  }
 }
