@@ -25,9 +25,12 @@ import org.apache.spark.unsafe.types.UTF8String
 private[graft] object DriverQuery {
 
   /** One snapshot row: m1's `chunk_id, content, embedding, session_id,
-    * token_count`. `tokenCount` passes through to the result as read. */
+    * token_count`. `tokenCount` passes through to the result as read;
+    * `tokens` is split once per snapshot, not per query. */
   final case class Doc(id: String, content: String, embedding: Array[Float],
-      sessionId: String, tokenCount: Any)
+      sessionId: String, tokenCount: Any) {
+    lazy val tokens: Array[String] = DriverQuery.tokens(content)
+  }
 
   object Doc {
     /** A collected row of those five columns, or None when a column the
@@ -98,20 +101,19 @@ private[graft] object DriverQuery {
   def bm25(docs: Seq[Doc], queryTerms: Seq[String], k: Int,
       k1: Double = 1.2, b: Double = 0.75): Seq[Hit] = {
     val terms = queryTerms.toSet
-    val toks = docs.map(d => tokens(d.content))
     val nDocs = docs.size.toLong
-    val avgdl = toks.map(_.length.toLong).sum.toDouble / nDocs.toDouble
+    val avgdl = docs.map(_.tokens.length.toLong).sum.toDouble / nDocs.toDouble
     val tf = scala.collection.mutable.LinkedHashMap.empty[String, Map[String, Long]]
-    docs.iterator.zip(toks.iterator).foreach { case (d, ts) =>
-      ts.iterator.filter(terms).foreach { t =>
+    docs.foreach { d =>
+      d.tokens.iterator.filter(terms).foreach { t =>
         val m = tf.getOrElse(d.id, Map.empty[String, Long])
         tf(d.id) = m.updated(t, m.getOrElse(t, 0L) + 1L)
       }
     }
     val df = tf.valuesIterator.flatMap(_.keysIterator).toSeq
       .groupBy(identity).map { case (t, ids) => t -> ids.size.toLong }
-    val dls = docs.iterator.zip(toks.iterator)
-      .map { case (d, ts) => d.id -> ts.length.toLong }.toSeq.groupMap(_._1)(_._2)
+    val dls = docs.iterator.filter(d => tf.contains(d.id))
+      .map(d => d.id -> d.tokens.length.toLong).toSeq.groupMap(_._1)(_._2)
     topHits(tf.toSeq.map { case (id, posting) =>
       val parts = for ((t, f) <- posting.toSeq; dl <- dls(id)) yield {
         val idf = StrictMath.log((nDocs - df(t) + 0.5) / (df(t) + 0.5) + 1.0)
@@ -139,7 +141,8 @@ private[graft] object DriverQuery {
     * matching doc row) and the reranker's top-`topK`, as result rows. */
   def rerank(fused: Seq[Hit], scope: Seq[Doc], score: String => Double,
       topK: Int): Seq[Row] = {
-    val byId = scope.groupBy(_.id)
+    val wanted = fused.iterator.map(_.id).toSet
+    val byId = scope.filter(d => wanted(d.id)).groupBy(_.id)
     val rows = for (f <- fused; d <- byId.getOrElse(f.id, Nil)) yield (f, d, score(d.content))
     this.topK(rows, topK)(_._3, _._1.id).map { case (f, d, s) =>
       Row(f.id, d.content, f.score, d.sessionId, d.tokenCount, s)

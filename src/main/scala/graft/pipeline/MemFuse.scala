@@ -504,8 +504,11 @@ class MemFuse(
 
   /** The tenant's m1 rows (`chunk_id, content, embedding, session_id,
     * token_count`, from the bucket-pruned [[m1ForUser]] view), collected
-    * in one job that stops each partition at `cap + 1` rows; None over
-    * the cap. Held as long as that view: until [[clearCache]]. */
+    * in one job of one task that reads the view's partitions in turn and
+    * stops at `cap + 1` rows: an over-cap tenant ships at most that many
+    * to the driver, however many files its bucket holds (a plain
+    * `limit` would scan one partition, then more per job, one job each).
+    * None over the cap. Held as long as that view: until [[clearCache]]. */
   private def tenantSnapshot(userId: String): Option[DriverQuery.Snapshot] = {
     val cap = snapshotCap
     if (cap < 0) return None
@@ -514,8 +517,7 @@ class MemFuse(
       val cols = m1ForUser(userId).filter(col("user_id") === userId).select(
         col("chunk_id"), col("content"), col("embedding"), col("session_id"),
         col("token_count"))
-      val rows = cols.mapPartitions(_.take(cap + 1))(
-        org.apache.spark.sql.Encoders.row(cols.schema)).collect()
+      val rows = cols.coalesce(1).limit(cap + 1).collect()
       val docs = rows.flatMap(DriverQuery.Doc.of).toVector
       val snap = Option.when(rows.length <= cap && docs.size == rows.length)(
         DriverQuery.Snapshot.of(docs, cols.schema))
@@ -1219,7 +1221,12 @@ class MemFuse(
 object MemFuse {
   /** Largest tenant (m1 rows) [[MemFuse.query]] answers from a driver
     * snapshot: at `Schemas.EmbeddingDim` 64 a capped snapshot holds 4 MB
-    * of embeddings plus its contents. */
+    * of embeddings plus its contents. Set where the indexed query's two
+    * paths meet: timed by hand on a 4-core host (perfbench's sf0.1
+    * documents, a 102k-row warehouse), an indexed query runs about as
+    * fast on either path here (the snapshot collect costs what the
+    * Spark tail saves) and faster in Spark at 4 caps, while the scan
+    * query's paths meet only at about 4 caps. */
   val SnapshotCap = 16384
 
   /** Rows all held snapshots may total (least recently used dropped first). */

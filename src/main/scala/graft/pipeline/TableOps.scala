@@ -530,10 +530,20 @@ object TableOps {
   // retirement record: the highest version [[dropArtifactPointers]] retired
   private def retiredRe(prefix: String) = (prefix + "_retired_v(\\d{8})").r
 
-  /** Highest version of `prefix` ever retired, from one pointer listing. */
-  private def retiredMax(names: Seq[String], prefix: String): Option[Long] = {
-    val re = retiredRe(prefix)
-    names.collect { case re(n) => n.toLong }.maxOption
+  /** A family's pointer dir entries: its committed versions, newest
+    * first, and the highest version ever retired. */
+  private final case class Pointers(committed: Seq[Long], retired: Option[Long])
+
+  /** [[Pointers]] per prefix, from ONE listing of the pointer dir. */
+  private def pointers(fs: FileSystem, base: String,
+      prefixes: Seq[String]): Map[String, Pointers] = {
+    val pd = ptrDir(base)
+    val names = if (fs.exists(pd)) fs.listStatus(pd).map(_.getPath.getName).toSeq else Nil
+    prefixes.map { prefix =>
+      val (re, rr) = (artifactRe(prefix), retiredRe(prefix))
+      prefix -> Pointers(names.collect { case re(n) => n.toLong }.sorted.reverse,
+        names.collect { case rr(n) => n.toLong }.maxOption)
+    }.toMap
   }
 
   /** Newest committed version dir name for `prefix`, if any. */
@@ -552,24 +562,18 @@ object TableOps {
   /** Newest committed version dir name per prefix that has one, from ONE
     * listing of the pointer dir. */
   def currentArtifactDirs(spark: SparkSession, base: String,
-      prefixes: Seq[String]): Map[String, String] = {
-    val pd = ptrDir(base)
-    val fs = fsOf(spark, pd)
-    if (!fs.exists(pd)) return Map.empty
-    val names = fs.listStatus(pd).map(_.getPath.getName)
-    prefixes.flatMap { prefix =>
-      val re = artifactRe(prefix)
-      names.collect { case re(n) => n.toLong }.maxOption
-        .map(v => prefix -> f"${prefix}_v$v%08d")
-    }.toMap
-  }
+      prefixes: Seq[String]): Map[String, String] =
+    pointers(fsOf(spark, ptrDir(base)), base, prefixes).flatMap { case (prefix, ps) =>
+      ps.committed.headOption.map(v => prefix -> f"${prefix}_v$v%08d")
+    }
 
   /** Name for the next version dir (build into `base/<name>/` first).
-    * Versions advance past any existing version DIRECTORY, not just the
-    * newest pointer: after [[dropArtifactPointers]] retires a family,
-    * its orphan dirs (possibly still scanned by readers pinned at open)
-    * stay on disk, and a later re-build of the same family must never
-    * Overwrite into one of them. */
+    * Versions advance past any existing version DIRECTORY, any committed
+    * pointer and any retired version: a retired family's dirs (possibly
+    * still scanned by readers pinned at open) stay on disk until
+    * [[vacuumArtifacts]] reclaims them, and a later re-build of the same
+    * family must never Overwrite into one of them nor reuse a number
+    * that vacuum reclaims. */
   def nextArtifactDir(spark: SparkSession, base: String, prefix: String): String = {
     val re = artifactRe(prefix)
     val bp = new Path(base)
@@ -578,13 +582,8 @@ object TableOps {
       if (!fs.exists(bp)) None
       else fs.listStatus(bp).map(_.getPath.getName)
         .collect { case re(n) => n.toLong }.maxOption
-    val pd = ptrDir(base)
-    val ptrNames =
-      if (!fs.exists(pd)) Seq.empty[String]
-      else fs.listStatus(pd).map(_.getPath.getName).toSeq
-    val ptrMax = ptrNames.collect { case re(n) => n.toLong }.maxOption
-    // past retired versions too, whose dirs vacuum may already have reclaimed
-    val next = (dirMax ++ ptrMax ++ retiredMax(ptrNames, prefix))
+    val ps = pointers(fs, base, Seq(prefix))(prefix)
+    val next = (dirMax ++ ps.committed.headOption ++ ps.retired)
       .maxOption.map(_ + 1).getOrElse(0L)
     f"${prefix}_v$next%08d"
   }
@@ -607,44 +606,41 @@ object TableOps {
 
   /** Retire an artifact family: delete every pointer file for `prefix`
     * so `currentArtifactDir` resolves to None (new opens see no such
-    * artifact), and record the highest version retired. Version DIRS
+    * artifact), then record the highest version retired. Version DIRS
     * are left on disk for readers pinned at open; [[vacuumArtifacts]]
-    * reclaims those at or below the record. */
+    * reclaims those at or below the record. The record comes last, so a
+    * crash in between leaves orphan dirs, never a record over a live
+    * pointer. */
   def dropArtifactPointers(spark: SparkSession, base: String, prefix: String): Unit = {
     val pd = ptrDir(base)
     val fs = fsOf(spark, pd)
-    if (!fs.exists(pd)) return
-    val re = artifactRe(prefix)
-    val retired = fs.listStatus(pd).map(_.getPath.getName)
-      .collect { case name @ re(n) => (name, n.toLong) }
-    if (retired.nonEmpty) {
-      exclusiveCreate(fs, new Path(pd, f"${prefix}_retired_v${retired.map(_._2).max}%08d"))
-        .foreach(_.close())
-      retired.foreach { case (name, _) => fs.delete(new Path(pd, name), false) }
+    val retired = pointers(fs, base, Seq(prefix))(prefix).committed
+    retired.foreach(v => fs.delete(new Path(pd, f"${prefix}_v$v%08d"), false))
+    retired.headOption.foreach { v =>
+      exclusiveCreate(fs, new Path(pd, f"${prefix}_retired_v$v%08d")).foreach(_.close())
     }
   }
 
   /** Drop artifact versions older than the newest `keep` (and their
     * pointer files), and every version dir at or below the family's
-    * retirement record. A build in flight is never touched: it has no
-    * pointer yet and [[nextArtifactDir]] numbered it past every retired
-    * version. */
+    * retirement record that has no committed pointer. A build in flight
+    * is never touched: it has no pointer yet and [[nextArtifactDir]]
+    * numbered it past every retired version. */
   def vacuumArtifacts(spark: SparkSession, base: String, prefix: String,
       keep: Int = 2): Unit = {
     val pd = ptrDir(base)
     val fs = fsOf(spark, pd)
-    if (!fs.exists(pd)) return
-    val re = artifactRe(prefix)
-    val ptrNames = fs.listStatus(pd).map(_.getPath.getName).toSeq
-    val versions = ptrNames.collect { case re(n) => n.toLong }.sorted.reverse
-    versions.drop(keep).foreach { v =>
+    val ps = pointers(fs, base, Seq(prefix))(prefix)
+    ps.committed.drop(keep).foreach { v =>
       val name = f"${prefix}_v$v%08d"
       fs.delete(new Path(base, name), true)
       fs.delete(new Path(pd, name), false)
     }
-    retiredMax(ptrNames, prefix).foreach { r =>
+    val live = ps.committed.take(keep).toSet
+    val re = artifactRe(prefix)
+    ps.retired.foreach { r =>
       fs.listStatus(new Path(base)).map(_.getPath).filter(_.getName match {
-        case re(n) => n.toLong <= r
+        case re(n) => n.toLong <= r && !live(n.toLong)
         case _     => false
       }).foreach(fs.delete(_, true))
     }

@@ -60,18 +60,22 @@ class IndexSpec extends SparkSpec {
 
   test("facade warm-miss plan pins its m1 scan count (x98 guard)") {
     // the x98_facade_warm_query rung's MISS path is MemFuse.query on
-    // the default (scan) flags; like q46's postings pin, this guards
-    // that no plan fan-in ever hides under ambient drift — the corpus
-    // table must be scanned a FIXED number of times per query
-    // regardless of warehouse growth
+    // the default (scan) flags. Below MemFuse.SnapshotCap that query
+    // runs on the driver (pinned first, below); this guards the plan of
+    // the Spark path it takes above the cap or with a fallback option.
+    // Like q46's postings pin, it guards that no plan fan-in ever hides
+    // under ambient drift — the corpus table must be scanned a FIXED
+    // number of times per query regardless of warehouse growth
     val dir = graft.TempDirs.create("idxwarm").toString
     val engine = new MemFuse(spark, dir)
     engine.ingest(Seq(
       Schemas.Message("m1", "s1", "u1", "r1", 1, "user", "spark shuffle partition tuning", ts(1)),
       Schemas.Message("m2", "s1", "u1", "r2", 2, "user", "broadcast join details", ts(2)),
       Schemas.Message("m3", "s2", "u1", "r3", 3, "user", "spark partition pruning", ts(3))).toDF())
-    // the plan under guard is the Spark path's; below the snapshot cap
-    // the facade answers on the driver, so this engine has no cap
+    assert(engine.query("spark partition", "u1", topK = 10).queryExecution.logical
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
+      "the default-flag query of a small tenant runs on the driver")
+    // the plan under guard is the Spark path's: this engine has no cap
     engine.snapshotCap = -1
     val df = engine.query("spark partition", "u1", topK = 10)
     val exec = df.queryExecution.executedPlan match {
@@ -390,6 +394,23 @@ class IndexSpec extends SparkSpec {
       "the retired version is reclaimed")
     inFlight.foreach(d => assert(new java.io.File(d, "part-0").exists(),
       s"${d.getName} is a build in flight and must survive"))
+  }
+
+  test("maintain() keeps a version whose pointer outlived its retirement record") {
+    val dir = graft.TempDirs.create("vaclive").toString
+    val engine = new MemFuse(spark, dir)
+    engine.ingest((1 to 6).map(i => Schemas.Message(s"m$i", s"s${i % 2}", "u1", s"r$i",
+      i, "user", s"spark partition note $i", ts(i))).toDF())
+    engine.buildIndexes(nlist = 2, vectorIndex = "pq")
+    // a record over a live pointer, as a retirement cut short between
+    // its two steps would leave were the record written first
+    Files.createFile(java.nio.file.Paths.get(s"$dir/index/_ptr/pq_retired_v00000000"))
+    engine.maintain(keepVersions = 1)
+    assert(new java.io.File(s"$dir/index/pq_v00000000").isDirectory,
+      "a version with a committed pointer is never reclaimed")
+    engine.refresh()
+    assert(engine.query("spark partition", "u1", topK = 3, useIndexes = true,
+      nProbe = 2).count() == 3)
   }
 
   test("keyword bm25 binds the corpus stats as literals, bit-identical to the stats join") {

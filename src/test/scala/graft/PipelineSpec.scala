@@ -502,6 +502,60 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  test("an over-cap tenant over several files stops its snapshot read in the first file") {
+    val (engine, dir) = freshEngine()
+    // four ingests: four files of 8 rows in u1's bucket
+    (0 until 4).foreach { f =>
+      engine.ingest((1 to 8).map { i =>
+        val n = f * 8 + i
+        msg(s"m$n", s"s$f", "u1", s"r$n", n, "user", s"spark partition note $n")
+      }.toDF())
+    }
+    val reference = new MemFuse(spark, dir)
+    reference.snapshotCap = -1
+    val expected = reference.query("spark note 3", "u1", topK = 3).collect().toSeq
+    assert(expected.nonEmpty)
+    engine.snapshotCap = 2
+    val sc = spark.sparkContext
+    val read = new java.util.concurrent.atomic.AtomicLong
+    val sentinelDone = new java.util.concurrent.CountDownLatch(1)
+    @volatile var sentinelJob = -1
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      import org.apache.spark.scheduler._
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => read.addAndGet(m.inputMetrics.recordsRead))
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(p =>
+            p.getProperty("spark.jobGroup.id") == "snapshot-sentinel")) sentinelJob = e.jobId
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == sentinelJob) sentinelDone.countDown()
+    }
+    // every file its own partition of the view
+    val openCost = "spark.sql.files.openCostInBytes"
+    val prev = spark.conf.getOption(openCost)
+    spark.conf.set(openCost, 128L * 1024 * 1024)
+    try {
+      val view = engine.m1ForUser("u1").filter(col("user_id") === "u1")
+      assert(view.rdd.getNumPartitions >= 4)
+      sc.addSparkListener(listener)
+      val overCap = engine.query("spark note 3", "u1", topK = 3)
+      // listener events arrive in order: once a later job's end is
+      // seen, every task of the snapshot collect has been counted
+      sc.setJobGroup("snapshot-sentinel", "listener barrier")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(sentinelDone.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      sc.removeSparkListener(listener)
+      assert(!onDriver(overCap))
+      // cap + 1 rows come from the first file read; a per-partition
+      // take would read (and ship) from every file
+      assert(read.get <= 8, s"the snapshot collect read ${read.get} rows, over one file's 8")
+      assert(overCap.collect().toSeq == expected)
+    } finally {
+      sc.removeSparkListener(listener)
+      prev.fold(spark.conf.unset(openCost))(spark.conf.set(openCost, _))
+    }
+  }
+
   test("every other fallback condition takes the Spark path") {
     val (engine, dir) = freshEngine()
     engine.createUser("u1", "User One")
